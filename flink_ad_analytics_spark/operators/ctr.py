@@ -32,10 +32,10 @@ Scale notes:
   (partial/final) plan -- map-side partial aggregation bounds shuffle
   volume.
 * Streaming: COUNT(DISTINCT) is unsupported in Structured Streaming;
-  the streaming counterpart (streaming/jobs.py) decomposes the plan
-  into dedup-within-watermark impression counts LEFT-JOINed with
-  interval-join click counts, proven equal to this batch spec by
-  tests/test_streaming.py.
+  the streaming counterpart (streaming/jobs.py) dedups ids within the
+  watermark and counts impression rows and interval-join matched-click
+  rows in one aggregate over their union, proven equal to this batch
+  spec by tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -177,9 +177,9 @@ def ctr_windows_colocated(
     holds for plain groupBys and SINGLE-distinct aggregations: the
     two-countDistinct form plans an Expand whose output partitioning
     is unknown, re-introducing the full-width shuffles (measured: 2
-    exchanges vs 0 on the same bucketed scan). So the plan decomposes
-    the way the proven-equal streaming twin does
-    (streaming/jobs.py::streaming_ctr_windows):
+    exchanges vs 0 on the same bucketed scan). So the plan counts each
+    side with its own single-distinct aggregate and merges them with a
+    join:
 
     * impression counts from the impression side ALONE -- the LEFT
       join cannot add or drop impressions, so
@@ -188,6 +188,11 @@ def ctr_windows_colocated(
     * per-(key, w, g) relations merged by a co-partitioned LEFT join
       (zero exchange), absent click groups filled with 0 exactly as
       NULL-skipping COUNT does in the flat plan.
+
+    (The streaming twin, streaming/jobs.py::streaming_ctr_windows, does
+    NOT merge by a join: it sums impression and matched-click marker
+    rows in one aggregate over their union, which a stream can do
+    because its ids are already deduped within the watermark.)
 
     The only exchange in the whole query moves the per-(key, w, g)
     pre-aggregated counts (one row per user-hour, not one row per

@@ -34,11 +34,9 @@ def engagement_windows(
     The segment is TAG-ENCODED to a non-null key for the pipeline
     ('\\x00' for NULL, '\\x01'+value otherwise -- injective, so no
     value can collide with the NULL tag) and decoded to COALESCE
-    semantics in the output projection. For THIS batch path the raw
-    nullable column would actually survive intact (ctr_windows is one
-    LEFT join + one groupBy/countDistinct -- no counts equi-join), but
-    the STREAMING twin's dedup-decomposed plan joins its two count
-    relations ON the group key, where SQL equi-joins drop NULL keys;
+    semantics in the output projection. Neither ctr_windows nor its
+    streaming twin needs the encoding to keep NULL keys (both group
+    the segment in a single groupBy, where NULLs form one group);
     batch and streaming share this one segment-key definition so the
     duality tests compare identical pipelines end to end.
     """

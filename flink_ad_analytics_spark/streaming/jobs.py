@@ -1,20 +1,20 @@
 """Streaming CTR/engagement jobs: the reference's main job
-(`/root/reference/flink/flink_job.sql:74-120`) as Structured Streaming
+(`flink/flink_job.sql:74-120`) as Structured Streaming
 plans, with EXACT COUNT(DISTINCT) semantics.
 
-Structured Streaming forbids countDistinct, so the plan is decomposed
-(SURVEY.md §7.4#1, upgraded from the dedup-only rewrite):
+Structured Streaming forbids countDistinct, so stage 1 deduplicates ids
+within the watermark and counts both sides in ONE windowed aggregate
+over a union of marker rows (SURVEY.md §7.4#1):
 
-  impressions --dedupWithinWatermark(imp_id)--> windowed count
-                                                      |
-                                                 LEFT JOIN (window, key)
-                                                      |
-  impressions JOIN clicks                             v
-  (interval inner join,     --> windowed count --> CTR result
-   clicks deduped by id)
+  impressions --dedupWithinWatermark(imp_id)---> (w, group, 1, 0) --+
+       |                                                            |
+       +--> interval inner join --> (w, group, 0, 1) ------------ UNION
+  clicks --dedupWithinWatermark(click_id)--^                        |
+                                                                    v
+                            groupBy(w, group): sum, sum --> CTR result
 
-* impression_count is exact: ids deduped within the watermark, then a
-  plain count -- no join fan-out can inflate it (the Flink bug the
+* impression_count is exact: ids deduped within the watermark, one
+  marker row each -- no join fan-out can inflate it (the Flink bug the
   reference hit, README.md:127, is structurally impossible here).
 * click_count is exact in both key regimes: under the reference's FK
   model (click -> exactly one impression) every inner-join output row
@@ -22,16 +22,34 @@ Structured Streaming forbids countDistinct, so the plan is decomposed
   click matching k impressions would fan out k times, so the plan
   inserts a dedup-within-watermark on (window, group, click_id) -- the
   exact grain of the batch spec's countDistinct -- before counting.
-* unmatched windows get click_count 0 via the outer join + coalesce,
-  preserving the LEFT-join "unmatched impression still counts"
-  semantics.
+* A window with impressions but no matched click gets click_count 0
+  from its own impression rows, which is the LEFT join's "unmatched
+  impression still counts" semantics. No group can hold clicks
+  without impressions: a matched click takes its impression's window
+  and group.
+* Watermark: the aggregate's input watermark is the join's OUTPUT
+  watermark, which the band (click time up to imp time + band) holds
+  back behind the inputs' watermark. A click matched late, while its
+  impression is still in join state, therefore still lands in a window
+  the aggregate has not yet emitted; append mode emits a window only
+  once no matched click can reach it.
+* NULL groups: the union is grouped once, and groupBy puts all NULL
+  keys in one group, so a NULL-group window counts its clicks exactly
+  as batch ``ctr_windows`` does (an equi-join of separate impression
+  and click counts on the group key would drop them).
 
-This is a 4-stateful-operator plan (dedup, dedup+join, 2 aggs + agg
-join), supported since Spark 3.5's multiple-stateful-operator work.
+Physical plan of the default FK-key query: 5 stateful operators -- the
+impression dedup (planned once per consumer: the union and the join),
+the click dedup, the interval join and the aggregate
+(tests/test_streaming.py::test_streaming_ctr_equals_batch pins the
+inventory). The non-FK key adds the fan-out dedup. A checkpoint written
+by an earlier plan that merged separate impression and click aggregates
+with a second join CANNOT be resumed by this plan: the stateful-operator
+layout differs, so such a query must restart from a fresh checkpoint.
 
 Scale notes: each stateful op keeps watermark-bounded state (dedup:
 one entry per id inside the watermark; join: band+watermark TTL,
-derived automatically from the time-range condition; aggs: open
+derived automatically from the time-range condition; aggregate: open
 windows only). With RocksDB state store
 (`spark.sql.streaming.stateStore.providerClass`) state spills to disk,
 so key cardinality is bounded by retention, not memory.
@@ -64,13 +82,6 @@ def streaming_ctr_windows(
     imp_d = impressions.dropDuplicatesWithinWatermark([imp_id])
     clk_d = clicks.dropDuplicatesWithinWatermark([click_id])
 
-    imp_counts = (
-        imp_d.groupBy(
-            F.window(F.col(imp_time), window).alias("w"),
-            F.col(group_key),
-        ).agg(F.count(F.lit(1)).alias("impression_count"))
-    )
-
     i = imp_d.alias("i")
     c = clk_d.alias("c")
     cond = F.expr(
@@ -94,22 +105,33 @@ def streaming_ctr_windows(
         # counting. Under the FK (key == imp_id) every joined row is
         # already a distinct click, so the extra stateful op is skipped.
         matched = matched.dropDuplicatesWithinWatermark(["w", group_key, click_id])
-    click_counts = matched.groupBy("w", group_key).agg(
-        F.count(F.col(click_id)).alias("click_count")
-    )
 
-    joined = imp_counts.join(click_counts, ["w", group_key], "left")
+    # One aggregate over both row kinds: an impression row marks (1, 0),
+    # a matched-click row (0, 1).
+    imp_rows = imp_d.select(
+        F.window(F.col(imp_time), window).alias("w"),
+        F.col(group_key),
+        F.lit(1).alias("__imp"),
+        F.lit(0).alias("__clk"),
+    )
+    clk_rows = matched.select(
+        "w", group_key, F.lit(0).alias("__imp"), F.lit(1).alias("__clk")
+    )
+    counts = imp_rows.unionByName(clk_rows).groupBy("w", group_key).agg(
+        F.sum("__imp").alias("impression_count"),
+        F.sum("__clk").alias("click_count"),
+    )
     ctr = F.when(
         F.col("impression_count") > 0,
-        F.coalesce(F.col("click_count"), F.lit(0)).cast("double")
+        F.col("click_count").cast("double")
         / F.col("impression_count").cast("double"),
     ).otherwise(F.lit(0.0))
-    return joined.select(
+    return counts.select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
         group_key,
         "impression_count",
-        F.coalesce(F.col("click_count"), F.lit(0)).alias("click_count"),
+        "click_count",
         ctr.alias("ctr"),
     )
 
@@ -131,10 +153,9 @@ def streaming_engagement_windows(
     displaying 'Unknown'). Coalescing before the groupBy -- the shape
     this twin had before round 5 -- would merge them into one row,
     silently diverging from batch/Flink whenever the source domain
-    contains the default literal. The raw nullable key can't be the
-    pipeline key either (the counts join drops NULL equi-keys), so the
-    segment is tag-encoded / decoded exactly like the batch operator
-    (operators/engagement.py:_tag) -- keeping the streaming twin
+    contains the default literal. The segment is tag-encoded / decoded
+    exactly like the batch operator (operators/engagement.py:_tag), so
+    both share one segment-key definition -- keeping the streaming twin
     value-equal to batch in every case
     (tests/test_streaming_recovery.py::
     test_engagement_null_vs_literal_default).

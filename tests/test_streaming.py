@@ -110,42 +110,65 @@ def _streams(spark, sf):
     return imp, clk
 
 
+def _batch_ctr(spark, impressions: pd.DataFrame, clicks: pd.DataFrame, **kw):
+    """Batch ``ctr_windows`` (the spec) on raw fixture frames."""
+    imp_b = spark.createDataFrame(impressions).withColumn(
+        "event_time", F.timestamp_millis(F.col("event_timestamp"))
+    )
+    clk_b = spark.createDataFrame(clicks).withColumn(
+        "click_time", F.timestamp_millis(F.col("event_timestamp"))
+    ).drop("event_timestamp")
+    return (
+        ctr_windows(imp_b, clk_b, window="1 minute", band="10 minutes", **kw)
+        .toPandas()
+        .sort_values(["window_start", "campaign_id"])
+        .reset_index(drop=True)
+    )
+
+
+def _streamed_ctr(spark, table: str):
+    """A memory-sink CTR table without the sentinel's window (NULL
+    campaigns kept: a plain != would drop them)."""
+    return (
+        spark.table(table)
+        .filter(~F.col("campaign_id").eqNullSafe("camp-sentinel"))
+        .toPandas()
+        .sort_values(["window_start", "campaign_id"])
+        .reset_index(drop=True)
+    )
+
+
+def _memory_query(result, name: str, checkpoint: str):
+    return (
+        result.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+
+
 def test_streaming_ctr_equals_batch(spark, stream_fixture):
     """The core dual-mode guarantee: streaming CTR (dedup-decomposed
     plan) == batch CTR (countDistinct spec), window for window."""
     sf = stream_fixture
     imp, clk = _streams(spark, sf)
     result = streaming_ctr_windows(imp, clk, window="1 minute", band="10 minutes")
-    q = (
-        result.writeStream.format("memory")
-        .queryName("ctr_stream")
-        .outputMode("append")
-        .option("checkpointLocation", f"{sf['base']}/ckpt_ctr")
-        .start()
-    )
+    q = _memory_query(result, "ctr_stream", f"{sf['base']}/ckpt_ctr")
     _drive(q, sf, sf["imp_dir"], sf["clk_dir"])
-    streamed = (
-        spark.table("ctr_stream")
-        .filter(F.col("campaign_id") != "camp-sentinel")
-        .toPandas()
-        .sort_values(["window_start", "campaign_id"])
-        .reset_index(drop=True)
-    )
-
-    fx = sf["fx"]
-    imp_b = spark.createDataFrame(fx.impressions).withColumn(
-        "event_time", F.timestamp_millis(F.col("event_timestamp"))
-    )
-    clk_b = spark.createDataFrame(fx.clicks).withColumn(
-        "click_time", F.timestamp_millis(F.col("event_timestamp"))
-    ).drop("event_timestamp")
-    batch = (
-        ctr_windows(imp_b, clk_b, window="1 minute", band="10 minutes")
-        .toPandas()
-        .sort_values(["window_start", "campaign_id"])
-        .reset_index(drop=True)
-    )
+    streamed = _streamed_ctr(spark, "ctr_stream")
+    batch = _batch_ctr(spark, sf["fx"].impressions, sf["fx"].clicks)
     pd.testing.assert_frame_equal(streamed, batch, check_dtype=False)
+
+    # Operator inventory of the FK-key plan: the impression dedup (planned
+    # once per consumer: the union and the join), the click dedup, one
+    # interval join and one aggregate over the union of impression and
+    # matched-click rows. A second join here would mean the counts are
+    # merged by an aggregate-join-aggregate plan again.
+    ops = sorted(s["operatorName"] for s in q.lastProgress["stateOperators"])
+    assert ops == ["dedupeWithinWatermark"] * 3 + [
+        "stateStoreSave", "symmetricHashJoin",
+    ], ops
 
 
 def test_streaming_ctr_nonfk_key_equals_batch(spark, stream_fixture):
@@ -158,39 +181,77 @@ def test_streaming_ctr_nonfk_key_equals_batch(spark, stream_fixture):
     result = streaming_ctr_windows(
         imp, clk, key="user_id", window="1 minute", band="10 minutes"
     )
-    q = (
-        result.writeStream.format("memory")
-        .queryName("ctr_stream_nonfk")
-        .outputMode("append")
-        .option("checkpointLocation", f"{sf['base']}/ckpt_ctr_nonfk")
-        .start()
-    )
+    q = _memory_query(result, "ctr_stream_nonfk", f"{sf['base']}/ckpt_ctr_nonfk")
     _drive(q, sf, sf["imp_dir"], sf["clk_dir"])
-    streamed = (
-        spark.table("ctr_stream_nonfk")
-        .filter(F.col("campaign_id") != "camp-sentinel")
-        .toPandas()
-        .sort_values(["window_start", "campaign_id"])
-        .reset_index(drop=True)
-    )
-
-    fx = sf["fx"]
-    imp_b = spark.createDataFrame(fx.impressions).withColumn(
-        "event_time", F.timestamp_millis(F.col("event_timestamp"))
-    )
-    clk_b = spark.createDataFrame(fx.clicks).withColumn(
-        "click_time", F.timestamp_millis(F.col("event_timestamp"))
-    ).drop("event_timestamp")
-    batch = (
-        ctr_windows(imp_b, clk_b, key="user_id", window="1 minute",
-                    band="10 minutes")
-        .toPandas()
-        .sort_values(["window_start", "campaign_id"])
-        .reset_index(drop=True)
-    )
+    streamed = _streamed_ctr(spark, "ctr_stream_nonfk")
+    batch = _batch_ctr(spark, sf["fx"].impressions, sf["fx"].clicks, key="user_id")
     # sanity: with ~10k users and 50 imp/s the fan-out is real -- if the
     # dedup were dropped, click_count would exceed the distinct count
     assert batch["click_count"].sum() > 0
+    pd.testing.assert_frame_equal(streamed, batch, check_dtype=False)
+
+
+def test_streaming_ctr_duplicate_delivery_equals_batch(spark, stream_fixture, tmp_path):
+    """At-least-once delivery into stage 1: every impression and every
+    click arrives TWICE, duplicated inside the same files. The id dedups
+    ahead of the union aggregate must restore the batch spec's
+    COUNT(DISTINCT) counts on the undoubled fixture."""
+    sf = stream_fixture
+    fx = sf["fx"]
+    dup = {"imp_dir": str(tmp_path / "imp"), "clk_dir": str(tmp_path / "clk")}
+    dup["imp_rest"] = _write_halves(
+        pd.concat([fx.impressions, fx.impressions], ignore_index=True), dup["imp_dir"]
+    )
+    dup["clk_rest"] = _write_halves(
+        pd.concat([fx.clicks, fx.clicks], ignore_index=True), dup["clk_dir"]
+    )
+    imp, clk = _streams(spark, dup)
+    result = streaming_ctr_windows(imp, clk, window="1 minute", band="10 minutes")
+    q = _memory_query(result, "ctr_stream_dup", str(tmp_path / "ckpt"))
+    _drive(q, dup, dup["imp_dir"], dup["clk_dir"])
+    streamed = _streamed_ctr(spark, "ctr_stream_dup")
+    batch = _batch_ctr(spark, fx.impressions, fx.clicks)
+    assert batch["click_count"].sum() > 0
+    pd.testing.assert_frame_equal(streamed, batch, check_dtype=False)
+
+
+def test_streaming_ctr_null_group_equals_batch(spark, tmp_path):
+    """A NULL campaign_id is a group like any other: its window counts
+    both its impressions and its matched click, as batch ``ctr_windows``
+    does (one groupBy, where NULL keys group together). An equi-join of
+    separately aggregated counts on (window, campaign_id) would never
+    match the NULL group and stream click_count 0 for it."""
+    imp_dir, clk_dir = str(tmp_path / "imp"), str(tmp_path / "clk")
+    os.makedirs(imp_dir)
+    os.makedirs(clk_dir)
+    t0 = VIRTUAL_START_MS
+    imps = pd.DataFrame(
+        [
+            {"impression_id": iid, "user_id": "u1", "campaign_id": camp,
+             "ad_id": "a", "device_type": "d", "browser": "b",
+             "event_timestamp": t0 + off, "cost": 0.1}
+            for iid, camp, off in [("i1", None, 0), ("i2", None, 1000),
+                                   ("i3", "c1", 2000)]
+        ]
+    )
+    clks = pd.DataFrame(
+        [{"click_id": "k1", "impression_id": "i1", "user_id": "u1",
+          "event_timestamp": t0 + 5000}]
+    )
+    imps.to_parquet(f"{imp_dir}/part-0.parquet", index=False)
+    clks.to_parquet(f"{clk_dir}/part-0.parquet", index=False)
+    imp, clk = _streams(spark, {"imp_dir": imp_dir, "clk_dir": clk_dir})
+    result = streaming_ctr_windows(imp, clk, window="1 minute", band="10 minutes")
+    q = _memory_query(result, "ctr_stream_null", str(tmp_path / "ckpt"))
+    q.processAllAvailable()
+    _sentinel_imp().to_parquet(f"{imp_dir}/part-1-sentinel.parquet", index=False)
+    _sentinel_clk().to_parquet(f"{clk_dir}/part-1-sentinel.parquet", index=False)
+    q.processAllAvailable()
+    q.stop()
+    streamed = _streamed_ctr(spark, "ctr_stream_null")
+    batch = _batch_ctr(spark, imps, clks)
+    null_row = batch[batch["campaign_id"].isna()]
+    assert list(null_row[["impression_count", "click_count"]].iloc[0]) == [2, 1]
     pd.testing.assert_frame_equal(streamed, batch, check_dtype=False)
 
 
