@@ -89,15 +89,6 @@ def main() -> None:
     # Warmup: JVM + codegen + parquet footer caches on the tiny SF.
     for name in names:
         materialize(queries[name](spark, "/root/testdata/sf0.001"))
-        if name.endswith(("_coloc", "_family")):
-            # bucketed-layout co-entries AND the events-family shared
-            # rollups: build the serving layout / derived pre-aggregate
-            # tables at the bench SF during warmup. Those writes are
-            # ingest-time cost amortized across every downstream query
-            # in production; the timed run below then measures the
-            # QUERY against the existing layout -- the same footing as
-            # every other query's pre-existing parquet input.
-            materialize(queries[name](spark, sf_dir))
 
     # VERDICT r10 item 7: the warmup corpus (sf0.001) is retired once
     # the timed SF takes over -- release its standing signature/band

@@ -1,8 +1,8 @@
 """Warehouse persistence for deterministic fit/index artifacts.
 
-The _coloc_table pattern (queries.py) applied to MODEL artifacts
-(round 6, VERDICT r5 #5): a real serving system pays training /
-index construction at ingest, not per query. Artifacts are keyed by
+Ingest-paid MODEL artifacts (round 6, VERDICT r5 #5): a real
+serving system pays training / index construction at ingest, not per
+query. Artifacts are keyed by
 the corpus CONTENT stamp (sources/batch.py::content_stamp -- part-
 file walk, not directory mtime) plus hyperparameters, so a
 regenerated corpus or changed params re-fits; a killed mid-write

@@ -36,6 +36,8 @@ not SQL-expressible.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 #: Exact decimal squared-distance fold between an array<float> column
@@ -282,12 +284,14 @@ _PRESCREEN_EPS = "1.0E-6"
 def _dbl_arr_sql(vals) -> str:
     """A literal ARRAY<DOUBLE> (repr() emits shortest round-trip
     decimals, and the CAST pins the element type: bare fractional
-    literals parse as DECIMAL in Spark SQL)."""
-    return (
-        "CAST(array("
-        + ",".join(repr(float(v)) for v in vals)
-        + ") AS ARRAY<DOUBLE>)"
-    )
+    literals parse as DECIMAL in Spark SQL). Non-finite values raise:
+    repr() spells them ``nan``/``inf``, which Spark SQL resolves as
+    column names, not numbers."""
+    floats = [float(v) for v in vals]
+    bad = [v for v in floats if not math.isfinite(v)]
+    if bad:
+        raise ValueError(f"_dbl_arr_sql: non-finite value {bad[0]!r}")
+    return "CAST(array(" + ",".join(map(repr, floats)) + ") AS ARRAY<DOUBLE>)"
 
 
 def _argmin_winner_sql(cent_arrs: list[list[float]], vec_expr: str) -> str:
@@ -1496,8 +1500,8 @@ def pq_fixedpoint_codes(
     out of pq_fixedpoint_topk because the code relation is an INDEX
     ARTIFACT: deterministic in (corpus, codebooks), tiny (m small ints
     per vector), and paid once at ingest in a real serving system --
-    queries_pipeline persists it next to the codebooks the way
-    _coloc_table persists bucket layouts."""
+    queries_pipeline persists it next to the codebooks in the fit
+    store."""
     dsub = dims // m
     qv = _fp_quantize(emb, id_col, vec_col)
     slices = F.expr(

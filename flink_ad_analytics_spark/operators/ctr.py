@@ -131,143 +131,6 @@ def ctr_windows(
     )
 
 
-def ctr_windows_colocated(
-    impressions: DataFrame,
-    clicks: DataFrame,
-    *,
-    key: str = "impression_id",
-    group_key: str = "campaign_id",
-    imp_id: str = "impression_id",
-    click_id: str = "click_id",
-    imp_time: str = "event_time",
-    click_time: str = "click_time",
-    window: str = "1 minute",
-    band: str = "10 minutes",
-    imp_extras: dict[str, Column] | None = None,
-    merge_extras: dict[str, Column] | None = None,
-) -> DataFrame:
-    """``ctr_windows`` value-twin for CO-PARTITIONED inputs: per-key
-    pre-aggregated COUNT(DISTINCT) decomposition.
-
-    ``imp_extras`` / ``merge_extras``: extra aggregates that ride the
-    SAME per-key impression pass and final merge (e.g. campaign
-    spend) -- each imp_extras[name] aggregates impression rows per
-    (key, window, group), each merge_extras[name] combines those
-    per-key columns in the final (window, group) aggregate. Keeps
-    the subtle per-key decomposition arguments in ONE place instead
-    of re-implementing the pipeline per consumer.
-
-    Validity contract (holds for the ad-events model, where the ids
-    are globally unique event ids and clicks join only to the same
-    user's impressions): every ``imp_id`` / ``click_id`` VALUE
-    co-occurs with exactly one ``key`` value. Then distinct-id sets
-    per (window, group) are disjoint across keys, so
-
-        COUNT(DISTINCT id) GROUP BY (w, g)
-          == SUM over key of COUNT(DISTINCT id) GROUP BY (key, w, g)
-
-    -- exact, not approximate. Duplicate deliveries collapse inside
-    the per-key distinct exactly as in the flat plan.
-
-    Why it exists (scale): on inputs co-partitioned by ``key``
-    (bucketed scans of the events table bucketed on user_id), every
-    step below the final merge runs WITHOUT an exchange --
-    HashPartitioning(key) satisfies the ClusteredDistribution of any
-    grouping/join whose keys include ``key``. That propagation only
-    holds for plain groupBys and SINGLE-distinct aggregations: the
-    two-countDistinct form plans an Expand whose output partitioning
-    is unknown, re-introducing the full-width shuffles (measured: 2
-    exchanges vs 0 on the same bucketed scan). So the plan counts each
-    side with its own single-distinct aggregate and merges them with a
-    join:
-
-    * impression counts from the impression side ALONE -- the LEFT
-      join cannot add or drop impressions, so
-      COUNT(DISTINCT i.imp_id) GROUP BY (w, g) never needed the join;
-    * click counts from the INNER band join, single countDistinct;
-    * per-(key, w, g) relations merged by a co-partitioned LEFT join
-      (zero exchange), absent click groups filled with 0 exactly as
-      NULL-skipping COUNT does in the flat plan.
-
-    (The streaming twin, streaming/jobs.py::streaming_ctr_windows, does
-    NOT merge by a join: it sums impression and matched-click marker
-    rows in one aggregate over their union, which a stream can do
-    because its ids are already deduped within the watermark.)
-
-    The only exchange in the whole query moves the per-(key, w, g)
-    pre-aggregated counts (one row per user-hour, not one row per
-    joined event) into the final (w, g) merge -- the 93-115MB
-    exact-distinct shuffle that .benchmarks/agg_floor_sf10.json
-    adjudicated as the events family's sf10 floor disappears.
-    """
-    w_col = F.window(F.col(imp_time), window)
-    imp_counts = (
-        impressions.groupBy(
-            F.col(key).alias("__key"),
-            w_col.alias("w"),
-            F.col(group_key).alias(group_key),
-        ).agg(
-            F.countDistinct(F.col(imp_id)).alias("__ki"),
-            *(
-                col.alias(name)
-                for name, col in (imp_extras or {}).items()
-            ),
-        )
-    )
-    i = impressions.alias("i")
-    c = clicks.alias("c")
-    matched = i.join(
-        c,
-        (F.col(f"i.{key}") == F.col(f"c.{key}"))
-        & (F.col(f"c.{click_time}") >= F.col(f"i.{imp_time}"))
-        & (
-            F.col(f"c.{click_time}")
-            <= F.col(f"i.{imp_time}") + F.expr(f"INTERVAL {band}")
-        ),
-    )
-    clk_counts = matched.groupBy(
-        F.col(f"i.{key}").alias("__key"),
-        F.window(F.col(f"i.{imp_time}"), window).alias("w"),
-        F.col(f"i.{group_key}").alias(group_key),
-    ).agg(F.countDistinct(F.col(f"c.{click_id}")).alias("__kc"))
-    # NULL-SAFE equality on the group column: the reference's raw
-    # segment keys carry NULLs (the COALESCE-in-projection shape), and
-    # a plain equi-join would drop their click counts to 0 while the
-    # flat twin's single groupBy kept them -- the engagement family's
-    # tag encoding dodged this at one call site, the operator itself
-    # must be correct for ANY nullable group. <=> is a hash-joinable
-    # key, so the co-partitioned zero-exchange property is unchanged.
-    ic, cc = imp_counts.alias("ic"), clk_counts.alias("cc")
-    per_key = ic.join(
-        cc,
-        (F.col("ic.__key") == F.col("cc.__key"))
-        & (F.col("ic.w") == F.col("cc.w"))
-        & F.col(f"ic.{group_key}").eqNullSafe(F.col(f"cc.{group_key}")),
-        "left_outer",
-    ).select("ic.*", F.col("cc.__kc").alias("__kc"))
-    agg = per_key.groupBy("w", group_key).agg(
-        F.sum("__ki").alias("impression_count"),
-        F.sum(F.coalesce(F.col("__kc"), F.lit(0))).alias("click_count"),
-        *(
-            col.alias(name)
-            for name, col in (merge_extras or {}).items()
-        ),
-    )
-    ctr = F.when(
-        F.col("impression_count") > 0,
-        F.col("click_count").cast("double") / F.col("impression_count").cast("double"),
-    ).otherwise(F.lit(0.0))
-    return agg.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        group_key,
-        "impression_count",
-        "click_count",
-        ctr.alias("ctr"),
-        *((name for name in merge_extras) if merge_extras else ()),
-    )
-
-
 def linear_attribution(
     impressions: DataFrame,
     clicks: DataFrame,

@@ -30,12 +30,11 @@ from .operators.anomaly import detect_anomalies
 from .operators.asof import asof_join
 from .operators.ctr import (
     ctr_windows,
-    ctr_windows_colocated,
     linear_attribution,
     position_attribution,
 )
 from .operators.engagement import engagement_windows
-from .sources.batch import content_stamp, load_events, load_table
+from .sources.batch import load_events, load_table
 
 # DuckDB CTE: events with microsecond event_time (matches load_events).
 EV_SQL = (
@@ -147,12 +146,6 @@ def q_ctr_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-partition dial was tried (16 is ~15% better than 32, 8 is
     worse). These absolute overheads amortize at cluster scale, which
     is why the shared-set ratio crosses 1.0 by sf1.
-
-    Round 6 confirms the decomposition: q_ctr_hourly_coloc removes
-    the 114MB shuffle via the bucketed layout + per-user distinct
-    decomposition and lands at 1.17s sf10 steady -- almost exactly
-    the ~1.1s scheduling term, proving the flat residual really was
-    shuffle + scheduling and nothing else.
     """
     imp, clk = _impressions_clicks(spark, sf_dir)
     return ctr_windows(
@@ -1134,13 +1127,10 @@ GROUP BY 1
 
 
 def _volume_shipping_from(
-    li: DataFrame, orders: DataFrame | None = None,
-    supp: DataFrame | None = None,
-    cust: DataFrame | None = None, nation: DataFrame | None = None,
-    *,
-    orders_f: DataFrame | None = None,
+    li: DataFrame, orders: DataFrame, supp: DataFrame, cust: DataFrame,
+    nation: DataFrame,
 ) -> DataFrame:
-    """Shared Q7 plan over caller-supplied inputs (flat or bucketed).
+    """Shared Q7 plan over caller-supplied inputs.
 
     Round-5 rewrite (the r4 plan was 2.8x the oracle's sf10 steady
     state). The pair predicate ((sn=N1 AND cn=N2) OR (sn=N2 AND
@@ -1162,23 +1152,8 @@ def _volume_shipping_from(
     full join. The residual pair filter only removes (N1,N1)/(N2,N2).
 
     Measured sf10 steady (tools/query_floor.py protocol): 2.85s (r4)
-    -> 2.44s flat, 1.57s on the bucketed co-entry
-    (volume_shipping_coloc) -- under the 2x-oracle bar (oracle 1.02s).
-
-    ``orders_f`` overload (round 8): a caller-supplied prebuilt
-    order -> cust_nation map, already restricted to the two nations --
-    the persisted _order_nation_coloc artifact in the coloc entry.
-    That replaces this function's orders x broadcast(customer)
-    derivation (and its exchange) with a zero-exchange bucketed scan.
+    -> 2.44s -- under the 2x-oracle bar (oracle 1.02s).
     """
-    if supp is None or nation is None or (
-        orders_f is None and (orders is None or cust is None)
-    ):
-        raise TypeError(
-            "_volume_shipping_from: supp and nation are always "
-            "required; pass either orders_f (a prebuilt two-nation "
-            "order->cust_nation map) or BOTH orders and cust"
-        )
     n1, n2 = "NATION_1", "NATION_2"
     two = nation.filter(F.col("n_name").isin(n1, n2))
     supp_f = (
@@ -1199,19 +1174,18 @@ def _volume_shipping_from(
                 (_cents("l_extendedprice")
                  * (F.lit(100) - _cents("l_discount"))).alias("rev_e4"))
     )
-    if orders_f is None:
-        cust_f = (
-            cust.join(
-                F.broadcast(two.select(F.col("n_nationkey").alias("c_nk"),
-                                       F.col("n_name").alias("cust_nation"))),
-                F.col("c_nationkey") == F.col("c_nk"))
-            .select("c_custkey", "cust_nation")
-        )
-        orders_f = (
-            orders.join(F.broadcast(cust_f),
-                        F.col("o_custkey") == F.col("c_custkey"))
-            .select("o_orderkey", "cust_nation")
-        )
+    cust_f = (
+        cust.join(
+            F.broadcast(two.select(F.col("n_nationkey").alias("c_nk"),
+                                   F.col("n_name").alias("cust_nation"))),
+            F.col("c_nationkey") == F.col("c_nk"))
+        .select("c_custkey", "cust_nation")
+    )
+    orders_f = (
+        orders.join(F.broadcast(cust_f),
+                    F.col("o_custkey") == F.col("c_custkey"))
+        .select("o_orderkey", "cust_nation")
+    )
     return (
         li_f.join(orders_f.hint("shuffle_hash"),
                   F.col("l_orderkey") == F.col("o_orderkey"))
@@ -3416,13 +3390,10 @@ def _rev_e4(price: str = "l_extendedprice", disc: str = "l_discount"):
 
 
 def _market_share_from(
-    li: DataFrame, orders: DataFrame | None = None,
-    cust: DataFrame | None = None, nation: DataFrame | None = None,
-    region: DataFrame | None = None, *,
-    orders_f: DataFrame | None = None,
-    broadcast_map: bool = False,
+    li: DataFrame, orders: DataFrame, cust: DataFrame, nation: DataFrame,
+    region: DataFrame, *, broadcast_map: bool = False,
 ) -> DataFrame:
-    """Shared Q8 plan over caller-supplied inputs (flat or bucketed).
+    """Shared Q8 plan over caller-supplied inputs.
 
     Round-9 flat rewrite (VERDICT r8 item 2; full 10-candidate
     experiment matrix in tools/market_share_experiments.py, adjudicated
@@ -3462,58 +3433,7 @@ def _market_share_from(
     converge to the same steady (shj 3.44 / bcast 3.27 same-session),
     so the threshold choice is about ramp + removing the fact
     exchange, not asymptotics.
-
-    ``orders_f`` overload: the bucketed co-entry passes the PERSISTED
-    order->nation(name) map; both map and fact scans are then
-    bucket-local on orderkey and the SHUFFLE_HASH join is
-    exchange-free (the 100 TB serving path, market_share_coloc).
     """
-    if orders_f is not None:
-        li_n = li.select(
-            "l_orderkey",
-            F.year("l_shipdate").cast("long").alias("o_year"),
-            _rev_e4().alias("rev_e4"),
-        )
-        per = (
-            li_n.join(orders_f.hint("shuffle_hash"),
-                      F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy(
-                F.spark_partition_id().alias("__pid"), "o_year", "nation"
-            )
-            .agg(F.sum("rev_e4").alias("p_rev"))
-            .groupBy("o_year", "nation")
-            # keep the 4dp sum as DECIMAL through the window: the
-            # share's numerator/denominator stay exact and order-free
-            .agg(
-                F.round(
-                    F.sum(F.col("p_rev").cast("decimal(38,0)"))
-                    / F.lit(10_000),
-                    4,
-                ).alias("rev_dec")
-            )
-        )
-        return _market_share_finish(per)
-
-    # ADVICE r7: the relational params default to None purely to
-    # admit the keyword-only orders_f overload -- a partial set
-    # would crash deep in the plan with an opaque None.join.
-    # Validate the contract at the boundary instead.
-    missing = [
-        n
-        for n, v in (
-            ("orders", orders),
-            ("cust", cust),
-            ("nation", nation),
-            ("region", region),
-        )
-        if v is None
-    ]
-    if missing:
-        raise TypeError(
-            "_market_share_from: pass either orders_f (a prebuilt "
-            "order->nation map) or ALL of orders/cust/nation/region"
-            f" -- missing: {missing}"
-        )
     nations_in_region = nation.join(
         F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
     ).select("n_nationkey")
@@ -3628,397 +3548,16 @@ ORDER BY o_year, nation
 """
 
 
-def _coloc_table(
-    spark: SparkSession, sf_dir: str, name: str, bucket_col: str
-) -> DataFrame:
-    """``name`` as a catalog table hash-bucketed on ``bucket_col``
-    (lazy, once per (sf_dir, table)).
-
-    The zero-exchange serving layout: the bucketed scan itself reports
-    outputPartitioning = hash(bucket_col, 32), so an equi-join on that
-    key exchanges ONLY the non-bucketed side (or nothing, when both
-    sides share the layout). The bucketed write (one full shuffle +
-    sort) is paid once per corpus, not per query -- the standard "pay
-    the layout at ingest, every downstream join is local" trade on a
-    1000-executor cluster; 32 buckets mirrors local shuffle.partitions
-    (thousands at 100 TB). Layout choice mirrors TPC-DS practice:
-    lineitem on l_orderkey; orders+customer co-bucketed on custkey so
-    the order->customer attribute join is exchange-free too.
-
-    sortBy(bucket_col) additionally lets SortMergeJoin skip its sort;
-    the coloc queries mostly stream via SHUFFLE_HASH anyway.
-    """
-    import hashlib
-    import os
-
-    from .sources.bucketed import read_bucketed, write_bucketed
-
-    # The tag carries a CONTENT stamp of the source parquet, not just
-    # the path: a regenerated sf_dir must mint a new table, or a
-    # session would silently re-register the previous corpus's layout
-    # while the flat twin and the oracle read the fresh files (same
-    # invalidation rule as queries_pipeline's _dir_stamp fit memo).
-    # The stamp walks the DATA FILES (relpath, mtime_ns, size), not
-    # the directory inode: rewriting part-file contents in place under
-    # the same names leaves the directory mtime unchanged, so a
-    # dir-level stat would serve a stale layout.
-    src = os.path.join(sf_dir, f"{name}.parquet")
-    stamp = content_stamp(src)
-    tag = hashlib.md5(f"{sf_dir}|{stamp}".encode()).hexdigest()[:10]
-    table = f"coloc_{name}_{tag}"
-    if not spark.catalog.tableExists(table):
-        loc = os.path.join(
-            spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"),
-            table,
-        )
-        # only re-register a COMPLETE previous write (_SUCCESS marker);
-        # a killed mid-write directory is rebuilt, not trusted
-        if os.path.isdir(loc) and os.path.exists(
-            os.path.join(loc, "_SUCCESS")
-        ):
-            # The in-memory catalog forgets tables between sessions but
-            # the warehouse files persist (a Hive metastore would keep
-            # both): re-register the existing bucketed files as an
-            # external table -- the CLUSTERED BY DDL restores the
-            # bucket spec the zero-exchange plan depends on.
-            schema = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in load_table(spark, sf_dir, name).schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE {table} ({schema}) USING parquet "
-                f"CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
-                f"INTO 32 BUCKETS LOCATION '{loc}'"
-            )
-        else:
-            if os.path.isdir(loc):
-                # incomplete leftover (no _SUCCESS): clear it, or
-                # saveAsTable refuses with LOCATION_ALREADY_EXISTS
-                import shutil
-
-                shutil.rmtree(loc, ignore_errors=True)
-            write_bucketed(
-                load_table(spark, sf_dir, name),
-                table,
-                bucket_col=bucket_col,
-                n_buckets=32,
-                sort_col=bucket_col,
-            )
-    return read_bucketed(spark, table)
-
-
-def _coloc_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _coloc_table(spark, sf_dir, "lineitem", "l_orderkey")
-
-
-#: Bumped on any semantic change to a derived layout's build query so
-#: a code change can never silently serve a stale pre-change artifact
-#: (same rule as fitstore.FIT_ALGO_VERSION).
-_DERIVED_LAYOUT_VERSION = 1
-
-
-def _coloc_derived(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    bucket_col: str,
-    src_tables: list[str],
-    build_fn,
-    *,
-    sort_col: str | None = None,
-) -> DataFrame:
-    """A DERIVED table (the output of ``build_fn()``) persisted as a
-    bucketed warehouse artifact -- the fitstore pattern applied to the
-    co-location layout. The build is a pure function of its source
-    tables, so the artifact is keyed by their content stamps (plus a
-    layout version) and stays oracle-replayable: the oracle recomputes
-    the same relation from the raw tables inside its own query.
-
-    This is the 100 TB denormalization trade: a map like
-    order -> nation is maintained at ingest (one join per corpus
-    refresh), and every downstream fact probe becomes a bucket-local
-    join with ZERO exchanges on either side instead of re-deriving the
-    map and shuffling it per query.
-
-    Concurrency + registration rules (ADVICE r7, mirrors
-    fitstore.persisted_fit): the build writes into a uuid-suffixed
-    EXTERNAL temp table next to the final location, then os.rename
-    into place (atomic on POSIX; refuses a non-empty dest, so a
-    concurrent winner's complete artifact is never clobbered -- ours
-    is dropped and theirs served). A marker-less leftover (killed
-    mid-write from an old code path) is cleared only after re-checking
-    _SUCCESS. Registration always derives the DDL schema from the
-    PERSISTED FILES (spark.read.parquet(loc).schema), never from the
-    current build_fn(): parquet resolves columns by name, so a schema
-    drifted ahead of the files would silently read missing columns as
-    NULL. A build-query change must bump _DERIVED_LAYOUT_VERSION,
-    which re-keys the tag and rebuilds."""
-    import hashlib
-    import os
-    import shutil
-    import uuid
-
-    from .sources.bucketed import read_bucketed, write_bucketed
-
-    stamps = "|".join(
-        content_stamp(os.path.join(sf_dir, f"{t}.parquet"))
-        for t in src_tables
-    )
-    tag = hashlib.md5(
-        f"v{_DERIVED_LAYOUT_VERSION}|{sf_dir}|{stamps}|{bucket_col}".encode()
-    ).hexdigest()[:10]
-    table = f"coloc_{name}_{tag}"
-    if spark.catalog.tableExists(table):
-        return read_bucketed(spark, table)
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    loc = os.path.join(warehouse, table)
-    if not (
-        os.path.isdir(loc) and os.path.exists(os.path.join(loc, "_SUCCESS"))
-    ):
-        if os.path.isdir(loc) and not os.path.exists(
-            os.path.join(loc, "_SUCCESS")
-        ):
-            # marker-less leftover: a killed mid-write. (A concurrent
-            # session completing between the outer check and here is
-            # caught by the rename below refusing a non-empty dest.)
-            shutil.rmtree(loc, ignore_errors=True)
-        tmp_table = f"{table}__build_{uuid.uuid4().hex[:8]}"
-        tmp_loc = os.path.join(warehouse, tmp_table)
-        try:
-            write_bucketed(
-                build_fn(),
-                tmp_table,
-                bucket_col=bucket_col,
-                n_buckets=32,
-                sort_col=sort_col,
-                path=tmp_loc,
-            )
-            try:
-                os.rename(tmp_loc, loc)
-            except OSError:
-                if not os.path.exists(os.path.join(loc, "_SUCCESS")):
-                    raise
-        finally:
-            # external table: dropping the catalog entry never deletes
-            # files (and ours were renamed away on success anyway)
-            spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-            if os.path.isdir(tmp_loc):
-                shutil.rmtree(tmp_loc, ignore_errors=True)
-    # single registration path for fresh builds AND re-registration of
-    # a previous session's surviving files: CLUSTERED BY DDL restores
-    # the bucket spec; schema comes from the files on disk.
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in spark.read.parquet(loc).schema.fields
-    )
-    sort_ddl = f"SORTED BY ({sort_col}) " if sort_col else ""
-    spark.sql(
-        f"CREATE TABLE {table} ({schema}) USING parquet "
-        f"CLUSTERED BY ({bucket_col}) {sort_ddl}"
-        f"INTO 32 BUCKETS LOCATION '{loc}'"
-    )
-    return read_bucketed(spark, table)
-
-
-def _order_nation_coloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """order -> (customer nation, region) map for ALL regions,
-    bucketed AND sorted on o_orderkey: the ingest-maintained
-    denormalization that turns every orderkey-grain fact probe into a
-    zero-exchange bucket-local join against the l_orderkey-bucketed
-    lineitem. Region filters apply at the bucketed scan (filters
-    preserve the bucket partitioning), so one artifact serves every
-    regional slice."""
-
-    def build():
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        cust = load_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_nationkey"
-        )
-        nr = (
-            load_table(spark, sf_dir, "nation")
-            .select("n_nationkey", "n_name", "n_regionkey")
-            .join(
-                F.broadcast(
-                    load_table(spark, sf_dir, "region").select(
-                        "r_regionkey", "r_name"
-                    )
-                ),
-                F.col("n_regionkey") == F.col("r_regionkey"),
-            )
-            .select("n_nationkey", "n_name", "r_name")
-        )
-        return (
-            orders.join(
-                cust.hint("shuffle_hash"),
-                F.col("o_custkey") == F.col("c_custkey"),
-            )
-            .join(F.broadcast(nr), F.col("c_nationkey") == F.col("n_nationkey"))
-            .select(
-                "o_orderkey",
-                F.col("n_name").alias("nation"),
-                F.col("r_name").alias("region"),
-            )
-        )
-
-    return _coloc_derived(
-        spark,
-        sf_dir,
-        "order_nation",
-        "o_orderkey",
-        ["orders", "customer", "nation", "region"],
-        build,
-        sort_col="o_orderkey",
-    )
-
-
-def q_market_share_coloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q8 on the bucketed serving layout, round-7 form: the probe
-    side is the PERSISTED order->nation map (_order_nation_coloc),
-    bucketed and sorted on o_orderkey like the fact -- so the whole
-    query is a zero-exchange bucket-local probe: lineitem scan
-    (bucketed l_orderkey) x order_nation scan (bucketed o_orderkey,
-    region filter pushed to the scan), SHUFFLE_HASH build on the map
-    buckets. The round-6 plan re-derived the map per query
-    (orders x customer x nation) and paid one ~34MB exchange to move
-    it into the fact layout; that derivation is now ingest-paid
-    (.benchmarks/market_share_floor_sf10.json tracks the residual).
-
-    Same result as market_share (same oracle SQL): layout and
-    ingest-time denormalization are physical choices, not semantic
-    ones -- the oracle recomputes the map inside its own query.
-    """
-    omap = (
-        _order_nation_coloc(spark, sf_dir)
-        .filter(F.col("region") == "ASIA")
-        .select("o_orderkey", "nation")
-    )
-    return _market_share_from(_coloc_lineitem(spark, sf_dir), orders_f=omap)
-
-
-def _coloc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``events`` bucketed on ``user_id`` with the computed
-    ``event_time`` column (same dtype-branching rule as load_events:
-    nanos-as-long ts is floor-divided, micros ts is cast). user_id is
-    the events family's join AND ownership key -- every impression_id
-    / click_id value belongs to one user -- so this one layout makes
-    the interval join and the distinct aggregation bucket-local."""
-    ev = _coloc_table(spark, sf_dir, "events", "user_id")
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        from .functions.time import epoch_nanos_to_ts
-
-        return ev.withColumn("event_time", epoch_nanos_to_ts("ts"))
-    return ev.withColumn("event_time", F.col("ts").cast("timestamp"))
-
-
-def q_ctr_hourly_coloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_ctr_hourly on the bucketed serving layout: events bucketed on
-    user_id, so the interval join is exchange-free and the exact
-    COUNT(DISTINCT)s run entirely within buckets via the per-user
-    decomposition (operators/ctr.py::ctr_windows_colocated -- exact
-    because each impression/click id belongs to one user). The only
-    exchange in the plan moves per-(user, window, campaign)
-    pre-aggregated counts -- the 114MB exact-distinct shuffle of the
-    flat plan (.benchmarks/agg_floor_sf10.json) disappears. Same
-    result as q_ctr_hourly (same oracle SQL): bucketing is a layout
-    choice, the decomposition a proven-equal aggregation strategy.
-    """
-    imp, clk = _impressions_clicks_from(_coloc_events(spark, sf_dir))
-    return ctr_windows_colocated(
-        imp,
-        clk,
-        key="user_id",
-        group_key="campaign_id",
-        window="1 hour",
-        band="10 minutes",
-    )
-
-
-def q_engagement_hourly_coloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_engagement_hourly on the bucketed layout: same exchange-free
-    join + per-user distinct decomposition as q_ctr_hourly_coloc, with
-    the tag-encoded COALESCE segment key (operators/engagement.py)."""
-    from .operators.engagement import _tag, _untag
-
-    imp, clk = _impressions_clicks_from(_coloc_events(spark, sf_dir))
-    out = ctr_windows_colocated(
-        imp.withColumn("segment", _tag("device_type")),
-        clk,
-        key="user_id",
-        group_key="segment",
-        window="1 hour",
-        band="10 minutes",
-    )
-    return out.withColumn(
-        "segment", _untag("segment", "Unknown")
-    ).withColumnRenamed("segment", "device_type")
-
-
-def q_campaign_spend_coloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_campaign_spend on the bucketed events layout. The spend sum
-    rides the SAME per-user pre-aggregation pass as the impression
-    counts (one scan, no separate spend scan or counts-x-spend join):
-    per-(user, day, campaign) partial decimal sums are exact in any
-    grouping order, so summing the partials and rounding ONCE at the
-    end equals the flat _dsum (round-after-total). Click counts come
-    from the inner band join; everything below the final (day,
-    campaign) merge is exchange-free on the user_id bucket layout
-    (q_ctr_hourly_coloc rationale)."""
-    imp, clk = _impressions_clicks_from(_coloc_events(spark, sf_dir))
-    out = ctr_windows_colocated(
-        imp,
-        clk,
-        key="user_id",
-        group_key="campaign_id",
-        window="1 day",
-        band="10 minutes",
-        imp_extras={
-            "__spend": F.sum(F.col("cost").cast("decimal(18,6)"))
-        },
-        merge_extras={
-            "spend": F.round(F.sum("__spend"), 4).cast("double")
-        },
-    ).drop("ctr")
-    cpc = F.when(
-        F.col("click_count") > 0,
-        F.col("spend") / F.col("click_count").cast("double"),
-    )
-    cpm = F.when(
-        F.col("impression_count") > 0,
-        (F.col("spend") * F.lit(1000.0)) / F.col("impression_count").cast("double"),
-    )
-    return out.select(
-        "window_start", "window_end", "campaign_id",
-        "impression_count", "click_count", "spend",
-        cpc.alias("cpc"), cpm.alias("cpm"),
-    )
-
-
-def q_anomaly_alerts_coloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_anomaly_alerts over the coloc CTR pipeline: the LAG stage is
-    a tiny-relation window either way; the upstream CTR cost is what
-    the bucketed layout removes."""
-    return detect_anomalies(q_ctr_hourly_coloc(spark, sf_dir))
-
-
-#: Session-scoped shared pre-aggregates for the events family, keyed
-#: by (applicationId, sf_dir, corpus content stamp): the statement-set
-#: pattern (reference flink_job.sql:74-120, one job feeding multiple
-#: sinks) expressed batch-side as persist + fan-out.
-_EVENTS_FAMILY_CACHE: dict[str, dict[str, DataFrame]] = {}
-
-
 def family_imp_pre_from(ev: DataFrame) -> DataFrame:
     """Impression-side family rollup cells from an events frame: per
     (user, hour-window, campaign, tagged-segment) exact distinct
     impression counts + exact decimal spend partials.
 
-    This is THE definition of the warehouse rollup — shared verbatim
-    by the batch build (`_events_family_pre` over the bucketed
-    layout) and asserted equal, cell for cell, to the streaming
-    maintenance twin (`streaming/jobs.py::streaming_family_rollups`,
-    which decomposes the countDistinct into dedup + count).
+    This is THE definition of the rollup: the batch backfill of the
+    streaming maintenance twin
+    (`streaming/jobs.py::streaming_family_rollups`, which decomposes
+    the countDistinct into dedup + count) and asserted equal to it,
+    cell for cell, in tests/test_streaming_family_rollup.py.
 
     Spend-exactness contract (ADVICE r8): ``__spend`` sums cost over
     ALL input rows -- countDistinct dedups the COUNT but not the
@@ -4050,7 +3589,7 @@ def family_imp_pre_from(ev: DataFrame) -> DataFrame:
 def family_clk_pre_from(ev: DataFrame) -> DataFrame:
     """Click-side family rollup: the DISTINCT (user, hour-window,
     campaign, tagged-segment, click_id) combinations of the band
-    join's matches. Shared definition for batch build and streaming
+    join's matches. Shared definition for batch backfill and streaming
     maintenance (see family_imp_pre_from)."""
     from .operators.engagement import _tag
 
@@ -4078,7 +3617,7 @@ def family_clk_pre_from(ev: DataFrame) -> DataFrame:
     )
 
 
-def family_counts_from(
+def _family_counts(
     imp_pre: DataFrame,
     clk_pre: DataFrame,
     group_col: str,
@@ -4086,120 +3625,27 @@ def family_counts_from(
     day: bool = False,
     with_spend: bool = False,
 ) -> DataFrame:
-    """Serve a family aggregate from rollup tables regardless of who
-    built them — the batch warehouse build or the streaming
-    maintenance job. Public face of `_family_counts` for rollups read
-    back from storage."""
-    return _family_counts(
-        {"imp_pre": imp_pre, "clk_pre": clk_pre},
-        group_col,
-        day=day,
-        with_spend=with_spend,
-    )
+    """Merge the two rollups (family_imp_pre_from /
+    family_clk_pre_from) into (window, group) counts, whoever built
+    them: the batch backfill or the streaming maintenance job.
 
-
-def _events_family_pre(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """ONE shared pass over the bucketed events layout feeding the
-    whole events family (ctr_hourly + engagement_hourly +
-    campaign_spend + anomaly input) -- the reference's multi-sink
-    statement set (``flink/flink_job.sql:74-120``: one pipeline, three
-    INSERTs) re-expressed for batch serving. Two compact relations are
-    materialized once per (session, corpus) and every family query is
-    a cheap bucket-local re-aggregation of them:
-
-    * ``imp_pre`` -- per (user, hour-window, campaign, tagged-segment)
-      distinct-impression counts and exact decimal spend partials.
-      One bucket-local groupBy over the impression side (all keys
-      include user_id, the bucket column -- zero exchange).
-    * ``clk_pre`` -- the DISTINCT (user, hour-window, campaign,
-      tagged-segment, click_id) combinations of the band join's
-      matches. The join and the distinct are both bucket-local.
-
-    Exactness of the re-aggregations (the ctr_windows_colocated
-    contract taken one grain finer): in this data model every
-    impression id determines its ENTIRE row -- user (id<->user
-    co-occurrence), timestamp (hence hour and day cell), campaign
-    (a function of user), segment (a function of event id), cost --
-    so each impression id lives in exactly one (user, hour, campaign,
-    segment) cell and per-cell COUNT(DISTINCT) partials sum exactly
-    to ANY coarser grouping (campaign-hour, segment-hour,
-    campaign-day); duplicate deliveries collapse inside their cell.
-    Click ids do NOT decompose that way (one click can band-match
-    impressions in different cells), so clk_pre keeps the distinct
-    combinations and each consumer re-runs COUNT(DISTINCT click_id)
-    at its own grain -- exact, and still bucket-local.
-
-    Scale: the pre-aggregates are INGEST-PAID WAREHOUSE ROLLUPS
-    (_coloc_derived, the order->nation-map doctrine): the corpus-level
-    scan + band join runs once per corpus refresh and lands as two
-    compact bucketed tables (sf10: 1.99M imp cells / 5.1k click
-    combos from 10M events), so no serving session ever re-pays it.
-    A session-level memory cache sits on top (first family query per
-    session reads the two tables once and persists them); every
-    consumer then re-aggregates from memory. On a cluster this is the
-    classic rollup-table + cache serving layer; the continuous form of
-    the same tables is streaming/jobs.py::streaming_family_rollups,
-    which maintains them incrementally from the live event stream
-    (proven cell-for-cell equal in
-    tests/test_streaming_family_rollup.py) -- this batch build doubles
-    as its backfill/recovery path. Measured family economics:
-    .benchmarks/events_family_sf10.json."""
-    import os
-
-    from pyspark.storagelevel import StorageLevel
-
-    key = "|".join(
-        (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            content_stamp(os.path.join(sf_dir, "events.parquet")),
-        )
-    )
-    hit = _EVENTS_FAMILY_CACHE.get(key)
-    if hit is not None:
-        return hit
-
-    imp_pre = _coloc_derived(
-        spark,
-        sf_dir,
-        "events_imp_pre",
-        "__key",
-        ["events"],
-        lambda: family_imp_pre_from(_coloc_events(spark, sf_dir)),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    clk_pre = _coloc_derived(
-        spark,
-        sf_dir,
-        "events_clk_pre",
-        "__key",
-        ["events"],
-        lambda: family_clk_pre_from(_coloc_events(spark, sf_dir)),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # materialize ONCE so every consumer reads the session cache
-    imp_pre.count()
-    clk_pre.count()
-    out = {"imp_pre": imp_pre, "clk_pre": clk_pre}
-    _EVENTS_FAMILY_CACHE[key] = out
-    return out
-
-
-def _family_counts(
-    pre: dict[str, DataFrame],
-    group_col: str,
-    *,
-    day: bool = False,
-    with_spend: bool = False,
-) -> DataFrame:
-    """Merge the shared pre-aggregates into (window, group) counts --
-    the ctr_windows_colocated tail reading persisted partials. Both
-    rollups and the per-key merge join keep user in their keys
-    (bucket-local); the final (window, group) merge is the family's
-    only exchange per output."""
+    Exactness of the re-aggregation: in this data model every
+    impression id determines its ENTIRE row -- user, timestamp (hence
+    hour and day cell), campaign (a function of user), segment (a
+    function of event id), cost -- so each impression id lives in
+    exactly one (user, hour, campaign, segment) cell and per-cell
+    COUNT(DISTINCT) partials sum exactly to ANY coarser grouping
+    (campaign-hour, segment-hour, campaign-day). Click ids do NOT
+    decompose that way (one click can band-match impressions in
+    different cells), so clk_pre keeps the distinct combinations and
+    this re-runs COUNT(DISTINCT click_id) per (user, window, group)
+    before summing over users -- exact, since a click id belongs to
+    one user."""
     w_expr = (
         F.window(F.col("w.start"), "1 day") if day else F.col("w")
     ).alias("ww")
     ic = (
-        pre["imp_pre"]
+        imp_pre
         .groupBy("__key", w_expr, group_col)
         .agg(
             F.sum("__ki").alias("__ki"),
@@ -4209,7 +3655,7 @@ def _family_counts(
         )
     )
     cc = (
-        pre["clk_pre"]
+        clk_pre
         .groupBy("__key", w_expr, group_col)
         .agg(F.countDistinct("click_id").alias("__kc"))
     )
@@ -4253,26 +3699,25 @@ def family_outputs_from(
 ) -> dict[str, DataFrame]:
     """All four family outputs (ctr_hourly / engagement_hourly /
     campaign_spend / anomaly_alerts) served from a PAIR OF ROLLUP
-    TABLES, regardless of who built them: the batch warehouse build
-    (_events_family_pre), or the streaming maintenance job's landed
-    parquet (streaming/jobs.py::streaming_family_rollups -- the
-    measured serve-from-maintained path,
-    tools/family_maintenance_bench.py, VERDICT r8 item 3). The four
-    q_*_family driver entries are thin wrappers over this function
-    with the session-cached warehouse rollups."""
+    TABLES, regardless of who built them: the batch backfill
+    (family_imp_pre_from / family_clk_pre_from over an events frame),
+    or the streaming maintenance job's landed parquet
+    (streaming/jobs.py::streaming_family_rollups -- the measured
+    serve-from-maintained path, tools/family_maintenance_bench.py).
+    Each output equals its flat q_* entry
+    (tests/test_streaming_family_rollup.py)."""
     from .operators.engagement import _untag
 
-    pre = {"imp_pre": imp_pre, "clk_pre": clk_pre}
     ctr = _family_ctr_cols(
-        _family_counts(pre, "campaign_id"), "campaign_id"
+        _family_counts(imp_pre, clk_pre, "campaign_id"), "campaign_id"
     )
     eng = (
-        _family_ctr_cols(_family_counts(pre, "__seg"), "__seg")
+        _family_ctr_cols(_family_counts(imp_pre, clk_pre, "__seg"), "__seg")
         .withColumn("__seg", _untag("__seg", "Unknown"))
         .withColumnRenamed("__seg", "device_type")
     )
     spend_agg = _family_counts(
-        pre, "campaign_id", day=True, with_spend=True
+        imp_pre, clk_pre, "campaign_id", day=True, with_spend=True
     )
     cpc = F.when(
         F.col("click_count") > 0,
@@ -4299,77 +3744,6 @@ def family_outputs_from(
         "campaign_spend": spend,
         "anomaly_alerts": detect_anomalies(ctr),
     }
-
-
-def q_ctr_hourly_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_ctr_hourly served from the shared events-family pass
-    (_events_family_pre): same oracle, same values -- the family
-    amortizes one scan + one band join across four outputs."""
-    pre = _events_family_pre(spark, sf_dir)
-    return family_outputs_from(pre["imp_pre"], pre["clk_pre"])["ctr_hourly"]
-
-
-def q_engagement_hourly_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_engagement_hourly from the shared family pass; the tagged
-    segment key rides the pre-aggregates, untagged exactly as in
-    the coloc twin."""
-    pre = _events_family_pre(spark, sf_dir)
-    return family_outputs_from(pre["imp_pre"], pre["clk_pre"])[
-        "engagement_hourly"
-    ]
-
-
-def q_campaign_spend_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_campaign_spend from the shared family pass: the day windows
-    roll up from the hour-grain partials (hour cells nest in day
-    cells), spend partials are exact decimals summed once more, and
-    day-grain distinct clicks re-count from clk_pre's distinct
-    combinations (a click matching two hours of one day collapses)."""
-    pre = _events_family_pre(spark, sf_dir)
-    return family_outputs_from(pre["imp_pre"], pre["clk_pre"])[
-        "campaign_spend"
-    ]
-
-
-def q_anomaly_alerts_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_anomaly_alerts over the family CTR output -- the fourth sink
-    of the shared pass."""
-    pre = _events_family_pre(spark, sf_dir)
-    return family_outputs_from(pre["imp_pre"], pre["clk_pre"])[
-        "anomaly_alerts"
-    ]
-
-
-def q_volume_shipping_coloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q7 on the bucketed serving layout, round-8 form: the probe side
-    is the PERSISTED order->nation map (_order_nation_coloc, the same
-    ingest-paid artifact market_share_coloc serves from), bucketed and
-    sorted on o_orderkey like the fact. The round-7 plan re-derived
-    the order->cust_nation map per query (orders x broadcast customer)
-    and paid one exchange to move it into the fact layout; now the
-    two-nation filter applies at the map's bucketed scan (filters
-    preserve bucket partitioning) and the whole probe is bucket-local:
-    broadcast supplier-nation prune on the fact scan, zero exchanges
-    on either join side.
-
-    Same result, same oracle (VOLUME_SHIPPING_SQL): the layout is a
-    physical choice; the oracle recomputes the map in its own query.
-    """
-    omap = (
-        _order_nation_coloc(spark, sf_dir)
-        .filter(F.col("nation").isin("NATION_1", "NATION_2"))
-        .select("o_orderkey", F.col("nation").alias("cust_nation"))
-    )
-    return _volume_shipping_from(
-        _coloc_lineitem(spark, sf_dir),
-        supp=load_table(spark, sf_dir, "supplier").select(
-            "s_suppkey", "s_nationkey"
-        ),
-        nation=load_table(spark, sf_dir, "nation").select(
-            "n_nationkey", "n_name"
-        ),
-        orders_f=omap,
-    )
 
 
 def q_pit_feature_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4740,21 +4114,5 @@ RELATIONAL_QUERIES: dict[str, tuple] = {
         FORECAST_REVENUE_CHANGE_SQL,
     ),
     "market_share": (q_market_share, MARKET_SHARE_SQL),
-    "market_share_coloc": (q_market_share_coloc, MARKET_SHARE_SQL),
-    "volume_shipping_coloc": (q_volume_shipping_coloc, VOLUME_SHIPPING_SQL),
-    "ctr_hourly_coloc": (q_ctr_hourly_coloc, CTR_HOURLY_SQL),
-    "engagement_hourly_coloc": (q_engagement_hourly_coloc, ENGAGEMENT_HOURLY_SQL),
-    "campaign_spend_coloc": (q_campaign_spend_coloc, CAMPAIGN_SPEND_SQL),
-    "anomaly_alerts_coloc": (q_anomaly_alerts_coloc, ANOMALY_ALERTS_SQL),
-    # the shared-pass family: one scan + one band join feeding all
-    # four outputs (_events_family_pre), each against the UNCHANGED
-    # flat oracle -- amortization is physical, not semantic
-    "ctr_hourly_family": (q_ctr_hourly_family, CTR_HOURLY_SQL),
-    "engagement_hourly_family": (
-        q_engagement_hourly_family,
-        ENGAGEMENT_HOURLY_SQL,
-    ),
-    "campaign_spend_family": (q_campaign_spend_family, CAMPAIGN_SPEND_SQL),
-    "anomaly_alerts_family": (q_anomaly_alerts_family, ANOMALY_ALERTS_SQL),
     "pit_feature_join": (q_pit_feature_join, PIT_FEATURE_JOIN_SQL),
 }

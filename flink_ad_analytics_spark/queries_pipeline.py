@@ -2014,7 +2014,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted warehouse artifacts (_persisted_fit; both deterministic
     in corpus + hyperparameters, so the oracle replays them);
     pq_codebook_fit owns the training cost, the one-time encode is
-    paid at first touch like _coloc_table's bucketing. Measured sf10:
+    paid at first touch. Measured sf10:
     on-the-fly encode made 'serving' 29s; persisted codes ~1s."""
     from .operators.clustering import pq_fixedpoint_codes, pq_fixedpoint_topk
 
@@ -3222,7 +3222,7 @@ def q_orc_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor row was NOT a slow ORC scan -- it was this entry re-WRITING
     the whole lang-partitioned corpus on every execution while the
     oracle only aggregates the parquet originals. The layout doctrine
-    everywhere else in this engine (\\_coloc_derived, fitstore) pays
+    everywhere else in this engine (fitstore) pays
     the layout at INGEST, once -- so the write is now gated on the
     session's own completed _SUCCESS marker: first execution writes
     (ingest, attributed to one_time in the floor protocol), repeats
@@ -3768,8 +3768,7 @@ def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-reproducible. Plan: one md5 projection per side, ONE
     full-outer shuffle join on the id, aggregate to class counts with
     a membership-pinning id checksum. At 100 TB both sides scan once
-    and join on the id key (unskewed); snapshots stored id-bucketed
-    make it a zero-exchange SMJ (sources/bucketed.py).
+    and join on the id key (unskewed).
     """
     docs = load_table(spark, sf_dir, "documents")
     old = docs.select("doc_id", F.md5("text").alias("fp"))

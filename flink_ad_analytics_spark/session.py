@@ -50,23 +50,6 @@ ENGINE_RUNTIME_CONF = {
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
-    # Accept SUBSET co-partitioning for joins: two relations hash-
-    # partitioned on user_id (the bucketed events layout) ARE
-    # co-located for a join on (user_id, window, campaign) -- the
-    # default-true guard would re-shuffle both sides on the full key
-    # set, re-introducing the exact shuffle the co-location layout
-    # exists to remove (ctr_hourly_coloc's merge join: 2 exchanges ->
-    # 0, measured). The trades the guard protects against do not bite
-    # here: (a) skew/cardinality -- the subset key is always the
-    # layout's own high-cardinality bucket key (the conf only matters
-    # when children ALREADY satisfy subset clustering, i.e. they carry
-    # a deliberate bucket layout); (b) parallelism -- a subset-key
-    # join then runs at the layout's bucket count instead of
-    # re-shuffling to shuffle.partitions, and this engine sizes bucket
-    # counts to shuffle.partitions by design (32 locally, thousands at
-    # cluster scale), so the width is the same and the exchange saved
-    # is pure win.
-    "spark.sql.requireAllClusterKeysForCoPartition": "false",
 }
 
 #: Defaults for sessions we create ourselves. All of these hold on a real

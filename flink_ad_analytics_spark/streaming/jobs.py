@@ -645,7 +645,7 @@ def streaming_family_rollups(
       this module, into dropDuplicatesWithinWatermark(impression_id)
       + plain count per (user, hour-window, campaign, tagged-segment)
       cell. Because an impression id determines its entire row (the
-      family exactness argument in `_events_family_pre`), each id
+      family exactness argument in `queries.py::_family_counts`), each id
       lives in exactly one cell, so the deduped count IS the distinct
       count, and append-mode emits each cell ONCE, final, when the
       watermark closes its window: the maintained table is strictly

@@ -183,6 +183,18 @@ def test_pq_dims_not_divisible_raises(spark):
         pq_fit(emb, m=7, k=4, max_iter=1)
 
 
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), -float("inf")])
+def test_dbl_arr_sql_rejects_non_finite(bad):
+    """repr() spells non-finite doubles as bare identifiers (nan, inf):
+    emitted into SQL they either fail to resolve or silently read a
+    column of that name, so the literal builder must refuse them."""
+    from flink_ad_analytics_spark.operators.clustering import _dbl_arr_sql
+
+    assert _dbl_arr_sql([1.0, 0.5]) == "CAST(array(1.0,0.5) AS ARRAY<DOUBLE>)"
+    with pytest.raises(ValueError, match=repr(bad)):
+        _dbl_arr_sql([1.0, bad])
+
+
 def test_pq_codes_stats_match_production_encoder(spark):
     """The decimal-exact SQL encoding (pq_codes_stats, the oracle
     bridge) must agree with the production numpy pq_encode given the

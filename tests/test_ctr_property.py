@@ -122,119 +122,3 @@ def test_ctr_matches_pandas_oracle(spark, imps, clks):
     )
     expected = pandas_oracle(imp, clk)
     pd.testing.assert_frame_equal(got, expected, check_dtype=False)
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
-)
-@given(imps=impressions_st, clks=clicks_st)
-def test_ctr_colocated_decomposition_equals_flat(spark, imps, clks):
-    """ctr_windows_colocated's per-key COUNT(DISTINCT) decomposition
-    must equal the flat spec on random event sets, under the
-    decomposition's validity contract: each click_id value belongs to
-    ONE key value (globally unique ids, as in the events model).
-    Duplicate DELIVERIES of the same click (same id, same fk) remain
-    possible and must still count once; band-edge, orphan and
-    multi-click fan-out cases come from the shared strategies."""
-    from flink_ad_analytics_spark.operators.ctr import (
-        ctr_windows_colocated,
-    )
-
-    seen = {}
-    for iid, camp, off in imps:
-        seen[iid] = (camp, off)
-    imp = pd.DataFrame(
-        [
-            {
-                "impression_id": f"i{iid}",
-                "campaign_id": f"c{camp}",
-                "ts": VIRTUAL_START_MS + off,
-            }
-            for iid, (camp, off) in seen.items()
-        ]
-    )
-    if imp.empty:
-        return
-    imp_by_id = {r.impression_id: r.ts for r in imp.itertuples()}
-    # ownership contract: one fk per click id; at-least-once delivery
-    # modeled by keeping EVERY occurrence of that id (duplicate rows)
-    fk_of = {}
-    for cid, fk, _delay in clks:
-        fk_of.setdefault(cid, fk)
-    clk_rows = []
-    for cid, _fk, delay in clks:
-        fk = fk_of[cid]
-        base = imp_by_id.get(f"i{fk}", VIRTUAL_START_MS)
-        clk_rows.append(
-            {
-                "click_id": f"k{cid}",
-                "impression_id": f"i{fk}",
-                "click_ts": base + delay,
-            }
-        )
-    clk = pd.DataFrame(
-        clk_rows, columns=["click_id", "impression_id", "click_ts"]
-    )
-    imp_s = spark.createDataFrame(imp).withColumn(
-        "event_time", F.timestamp_millis(F.col("ts"))
-    )
-    clk_s = spark.createDataFrame(
-        clk, schema="click_id string, impression_id string, click_ts long"
-    ).withColumn("click_time", F.timestamp_millis(F.col("click_ts")))
-    kw = dict(window="1 minute", band="10 minutes")
-    flat = {
-        tuple(sorted(r.asDict().items()))
-        for r in ctr_windows(imp_s, clk_s, **kw).collect()
-    }
-    coloc = {
-        tuple(sorted(r.asDict().items()))
-        for r in ctr_windows_colocated(imp_s, clk_s, **kw).collect()
-    }
-    assert flat == coloc
-
-
-def test_ctr_colocated_null_group_keys_match_flat(spark):
-    """NULL group keys (the reference's raw COALESCE segment shape)
-    must flow through the colocated decomposition's merge join: a
-    plain equi-join would zero their click counts while the flat
-    groupBy kept them (round-6 review finding, fixed with <=>)."""
-    import datetime as dt
-
-    from flink_ad_analytics_spark.operators.ctr import (
-        ctr_windows_colocated,
-    )
-
-    T0 = dt.datetime(2024, 1, 1)
-    imp = spark.createDataFrame(
-        [
-            (1, 10, None, T0),                              # NULL group, clicked
-            (2, 10, "g1", T0 + dt.timedelta(minutes=1)),    # named group
-            (3, 20, None, T0 + dt.timedelta(minutes=2)),    # NULL group, unclicked
-        ],
-        "impression_id long, user_id long, campaign_id string, event_time timestamp",
-    )
-    clk = spark.createDataFrame(
-        [
-            (101, 10, T0 + dt.timedelta(minutes=1)),
-            (102, 10, T0 + dt.timedelta(minutes=3)),
-        ],
-        "click_id long, user_id long, click_time timestamp",
-    )
-    kw = dict(key="user_id", group_key="campaign_id",
-              window="1 hour", band="10 minutes")
-    flat = {
-        tuple(sorted(r.asDict().items()))
-        for r in ctr_windows(imp, clk, **kw).collect()
-    }
-    coloc = {
-        tuple(sorted(r.asDict().items()))
-        for r in ctr_windows_colocated(imp, clk, **kw).collect()
-    }
-    assert flat == coloc
-    # and the NULL group really has nonzero clicks (not a vacuous pass)
-    null_rows = [
-        dict(t) for t in flat if dict(t)["campaign_id"] is None
-    ]
-    assert any(r["click_count"] > 0 for r in null_rows)

@@ -12,7 +12,6 @@ the scan) stays excluded.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from flink_ad_analytics_spark.operators.dedup import minhash_signatures
 from flink_ad_analytics_spark.queries import (
@@ -116,48 +115,6 @@ def test_rollup_single_expand_single_shuffle(spark):
     # not scan rows): the aggregate keyed by __pid appears below it
     assert "spark_partition_id" in plan.lower()
     assert plan.count("Exchange") <= 2
-
-
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the same key with the same bucket count
-    must join with NO exchange on either side (the one-time write-side
-    shuffle replaces the per-query shuffle -- the repeated-join lever
-    at 100 TB)."""
-    from flink_ad_analytics_spark.sources.bucketed import (
-        read_bucketed,
-        write_bucketed,
-    )
-    from flink_ad_analytics_spark.sources.batch import load_table
-
-    orders = load_table(spark, SF_CORRECT, "orders")
-    li = load_table(spark, SF_CORRECT, "lineitem").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    write_bucketed(orders, "t_orders_b", bucket_col="o_orderkey",
-                   n_buckets=8, sort_col="o_orderkey")
-    write_bucketed(li, "t_lineitem_b", bucket_col="o_orderkey",
-                   n_buckets=8, sort_col="o_orderkey")
-    try:
-        # merge hint: at toy SF Catalyst would broadcast the small side
-        # (a BroadcastExchange); force SMJ so the assertion isolates
-        # the bucket-co-location property (at real scale SMJ is what
-        # Catalyst picks anyway for large-x-large)
-        j = read_bucketed(spark, "t_orders_b").hint("merge").join(
-            read_bucketed(spark, "t_lineitem_b"), "o_orderkey"
-        )
-        plan = plan_of(j)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        # same row count as the shuffled join: bucketing is a layout
-        # change, not a semantic one
-        plain = load_table(spark, SF_CORRECT, "orders").join(
-            load_table(spark, SF_CORRECT, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        assert j.count() == plain.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
 
 
 def test_top_terms_single_corpus_pass(spark):
@@ -497,207 +454,6 @@ def test_dominant_suppliers_window_replaces_self_join(spark):
     assert plan.count("lineitem.parquet") == 1
 
 
-def test_coloc_entries_fact_never_exchanged(spark):
-    """The bucketed co-entries' core promise: the lineitem FACT flows
-    into the orderkey join straight from its bucketed scan -- the only
-    exchanges left are the small order->nation map and the tiny
-    post-agg stages. Gated on the EXECUTED plan: the bucketed scan is
-    present and the total exchange count is bounded by the non-fact
-    stages (a fact re-shuffle would add wide hash exchanges and blow
-    the bound).
-
-    Round-8 bounds, matching the persisted-order->nation-map plans
-    exactly: market_share = 4 (two-level agg partial+merge, window
-    re-partition on o_year, final orderBy range exchange);
-    volume_shipping = 2 (two-level agg partial+merge). Any map
-    re-derivation exchange (the round-6/7 shapes) blows the bound."""
-    from flink_ad_analytics_spark.queries import (
-        q_market_share_coloc,
-        q_volume_shipping_coloc,
-    )
-
-    for fn, max_exchanges in (
-        (q_market_share_coloc, 4),
-        (q_volume_shipping_coloc, 2),
-    ):
-        df = fn(spark, SF_CORRECT)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # AQE's toString echoes the pre-adaptive plan below the final
-        # one; count only the plan that actually ran
-        plan = plan.split("== Initial Plan ==")[0]
-        assert "Bucketed: true" in plan, plan[:2000]
-        # orders/customer co-bucketed: no exchange under their join either
-        n_ex = plan.count("Exchange hashpartitioning") + plan.count(
-            "Exchange rangepartitioning"
-        ) + plan.count("Exchange SinglePartition")
-        assert n_ex <= max_exchanges, f"{fn.__name__}: {n_ex} exchanges\n{plan[:3000]}"
-
-
-def test_events_coloc_single_merge_exchange(spark):
-    """The events-family co-entries' core promise: with events bucketed
-    on user_id, the interval join AND the exact-distinct aggregation
-    run bucket-locally (per-user decomposition, no Expand) -- the only
-    hash exchange in the whole executed plan is the final tiny
-    (window, group) merge of per-user-hour pre-aggregates. The flat
-    plan's 93-115MB exact-distinct shuffle must NOT reappear."""
-    from flink_ad_analytics_spark.queries import (
-        q_ctr_hourly_coloc,
-        q_engagement_hourly_coloc,
-    )
-
-    for fn in (q_ctr_hourly_coloc, q_engagement_hourly_coloc):
-        df = fn(spark, SF_CORRECT)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==")[0]
-        assert "Bucketed: true" in plan, plan[:2000]
-        n_ex = plan.count("Exchange hashpartitioning") + plan.count(
-            "Exchange rangepartitioning"
-        ) + plan.count("Exchange SinglePartition")
-        assert n_ex <= 1, f"{fn.__name__}: {n_ex} exchanges\n{plan[:3000]}"
-        # the no-Expand contract: Expand's unknown output partitioning
-        # is exactly what reintroduces the wide shuffle
-        assert "Expand" not in plan, f"{fn.__name__} plans Expand\n{plan[:3000]}"
-
-
-def test_events_family_shared_pass_single_exchange(spark):
-    """The round-8 events-family amortization: all four outputs read
-    the SAME persisted pre-aggregates (one scan + one band join paid
-    once per session) and each final plan is one tiny (window, group)
-    merge exchange over an InMemoryTableScan -- the bucket-derived
-    partitioning must survive the persist, or the rollups re-shuffle
-    per consumer and the amortization is fiction."""
-    import flink_ad_analytics_spark.queries as qmod
-    from flink_ad_analytics_spark.queries import (
-        q_campaign_spend_family,
-        q_ctr_hourly_family,
-        q_engagement_hourly_family,
-    )
-
-    n_cache_before = len(qmod._EVENTS_FAMILY_CACHE)
-    for fn in (
-        q_ctr_hourly_family,
-        q_engagement_hourly_family,
-        q_campaign_spend_family,
-    ):
-        df = fn(spark, SF_CORRECT)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==")[0]
-        assert "InMemoryTableScan" in plan, plan[:2000]
-        n_ex = plan.count("Exchange hashpartitioning") + plan.count(
-            "Exchange rangepartitioning"
-        ) + plan.count("Exchange SinglePartition")
-        assert n_ex <= 1, f"{fn.__name__}: {n_ex} exchanges\n{plan[:3000]}"
-        assert "Expand" not in plan, f"{fn.__name__} plans Expand"
-    # the three consumers shared ONE build (one new cache entry at most)
-    assert len(qmod._EVENTS_FAMILY_CACHE) <= n_cache_before + 1
-
-
-def test_coloc_table_rebuilds_partial_write_and_restamps(spark, tmp_path):
-    """_coloc_table trust rules: a leftover directory WITHOUT a
-    _SUCCESS marker (killed mid-write) is cleared and rebuilt rather
-    than re-registered; and a regenerated source parquet mints a NEW
-    table tag instead of silently serving the stale layout."""
-    import os
-    import shutil
-
-    from flink_ad_analytics_spark.queries import _coloc_table
-
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    src = spark.createDataFrame(
-        [(i, i % 7) for i in range(100)], "l_orderkey long, x long"
-    )
-    src.write.parquet(f"{sf}/lineitem.parquet")
-
-    t1 = _coloc_table(spark, sf, "lineitem", "l_orderkey")
-    assert t1.count() == 100
-    # derive THIS test's table name from its own sf dir (scanning the
-    # shared warehouse could grab -- and drop -- another test's table)
-    import hashlib
-
-    from flink_ad_analytics_spark.sources.batch import content_stamp
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    tag = hashlib.md5(
-        f"{sf}|{content_stamp(f'{sf}/lineitem.parquet')}".encode()
-    ).hexdigest()[:10]
-    tag_dir = f"coloc_lineitem_{tag}"
-    assert spark.catalog.tableExists(tag_dir)
-    # DROP TABLE on the managed table deletes its files too; leave a
-    # marker-less directory behind to simulate the killed write
-    spark.sql(f"DROP TABLE {tag_dir}")
-    os.makedirs(os.path.join(wh, tag_dir), exist_ok=True)
-    success = os.path.join(wh, tag_dir, "_SUCCESS")
-    if os.path.exists(success):
-        os.remove(success)
-    t2 = _coloc_table(spark, sf, "lineitem", "l_orderkey")
-    assert t2.count() == 100  # rebuilt, not trusted
-    assert os.path.exists(success)
-
-    # regenerate the source with DIFFERENT content: new stamp -> new
-    # table; the old registered table must not be served
-    shutil.rmtree(f"{sf}/lineitem.parquet")
-    spark.createDataFrame(
-        [(i, 0) for i in range(50)], "l_orderkey long, x long"
-    ).write.parquet(f"{sf}/lineitem.parquet")
-    t3 = _coloc_table(spark, sf, "lineitem", "l_orderkey")
-    assert t3.count() == 50
-
-
-def test_coloc_stamp_sees_inplace_part_rewrite(spark, tmp_path):
-    """The content stamp must change when a PART FILE is rewritten in
-    place under the same name -- the directory inode's mtime doesn't
-    move for that, so a dir-level stat would re-register (and serve)
-    the stale bucketed layout while the flat twin reads fresh data."""
-    import glob
-    import os
-    import shutil
-
-    from flink_ad_analytics_spark.queries import _coloc_table
-    from flink_ad_analytics_spark.sources.batch import content_stamp
-
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    pq = f"{sf}/lineitem.parquet"
-    spark.createDataFrame(
-        [(i, i) for i in range(60)], "l_orderkey long, x long"
-    ).coalesce(1).write.parquet(pq)
-    before = content_stamp(pq)
-    assert _coloc_table(spark, sf, "lineitem", "l_orderkey").count() == 60
-
-    # rewrite the single part's CONTENTS in place: same file name, same
-    # directory entry set, so the directory inode's mtime is untouched
-    tmp_out = f"{sf}/_rewrite"
-    spark.createDataFrame(
-        [(i, i) for i in range(25)], "l_orderkey long, x long"
-    ).coalesce(1).write.parquet(tmp_out)
-    new_part = glob.glob(f"{tmp_out}/part-*.parquet")[0]
-    old_part = glob.glob(f"{pq}/part-*.parquet")[0]
-    shutil.copyfile(new_part, old_part)  # copyfile keeps the dest name
-    # the Hadoop LocalFileSystem checksum sidecar must match the new
-    # bytes (its format depends only on content, not file name)
-    new_crc = os.path.join(
-        os.path.dirname(new_part), f".{os.path.basename(new_part)}.crc"
-    )
-    old_crc = os.path.join(
-        os.path.dirname(old_part), f".{os.path.basename(old_part)}.crc"
-    )
-    if os.path.exists(new_crc):
-        shutil.copyfile(new_crc, old_crc)
-    shutil.rmtree(tmp_out)
-    # Spark's own FileStatusCache also holds the stale part length; an
-    # external in-place rewrite requires refreshByPath in ANY engine --
-    # the stamp fix under test is _coloc_table's layout memo on top
-    spark.catalog.refreshByPath(pq)
-
-    assert content_stamp(pq) != before
-    # and the layout path agrees: a fresh tag is minted, fresh data read
-    assert _coloc_table(spark, sf, "lineitem", "l_orderkey").count() == 25
-
-
 def test_market_share_flat_fact_never_exchanged(spark):
     """Round-9 flat Q8 gate (VERDICT r8 #2, adjudicated in
     .benchmarks/market_share_floor_sf10.json): under the size-aware
@@ -708,8 +464,8 @@ def test_market_share_flat_fact_never_exchanged(spark):
     broadcasts into orders). A regression to the r8 shape re-adds the
     orders/customer shuffle + the fact shuffle and blows the bound.
     Bound = 4, all value-sized: two-level agg partial (__pid grain) +
-    merge, window re-partition on o_year, final orderBy range -- the
-    same post-agg tail the coloc gate pins. The structural 100 TB
+    merge, window re-partition on o_year, final orderBy range. The
+    structural 100 TB
     path (broadcast_map=False) must instead hash-build the map and
     stream the fact: ShuffledHashJoin, never a fact sort."""
     from pyspark.sql import functions as F

@@ -1,7 +1,7 @@
 """Targeted tests for the round-7 hardening branches (VERDICT r7 #4/#5):
 fitstore's TOCTOU / tmp-cleanup / algo-version paths, content_stamp's
-errno contract, the zero-token fertility group, and _coloc_derived's
-atomic build + re-register DDL path."""
+errno contract and in-place-rewrite detection, and the zero-token
+fertility group."""
 
 from __future__ import annotations
 
@@ -166,6 +166,29 @@ def test_content_stamp_preserves_non_enoent_errno(tmp_path, monkeypatch):
         content_stamp(str(p))
 
 
+def test_content_stamp_sees_inplace_part_rewrite(tmp_path):
+    """The stamp must change when a PART FILE is rewritten in place
+    under the same name. The directory inode's mtime does not move for
+    that, so a dir-level stat would let fitstore and
+    queries_pipeline._dir_stamp serve what they built from the old
+    bytes."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    pq_dir = tmp_path / "lineitem.parquet"
+    pq_dir.mkdir()
+    part = pq_dir / "part-00000.parquet"
+    papq.write_table(pa.table({"l_orderkey": list(range(60))}), part)
+    os.utime(pq_dir, ns=(1_000_000_000, 1_000_000_000))
+    before = content_stamp(str(pq_dir))
+
+    # rewrite the part's CONTENTS in place: same file name, same
+    # directory entry set, so the directory inode's mtime is untouched
+    papq.write_table(pa.table({"l_orderkey": list(range(25))}), part)
+    assert os.stat(pq_dir).st_mtime_ns == 1_000_000_000
+    assert content_stamp(str(pq_dir)) != before
+
+
 # -- zero-token fertility group -----------------------------------------------
 
 
@@ -215,169 +238,3 @@ def test_tokenizer_fertility_all_empty_group_null_ratios(spark, tmp_path):
     assert orow.n_tokens == 0
     assert math.isnan(orow.bytes_per_token)  # pandas NULL -> NaN
     assert math.isnan(orow.chars_per_token)
-
-
-# -- _coloc_derived: atomic build + re-register path ---------------------------
-
-
-def _derived_fixture(spark, tmp_path, rows=60):
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf, exist_ok=True)
-    spark.createDataFrame(
-        [(i, i % 5) for i in range(rows)], "o_orderkey long, grp long"
-    ).write.mode("overwrite").parquet(f"{sf}/orders.parquet")
-    return sf
-
-
-def test_coloc_derived_reregister_and_version_bump(spark, tmp_path):
-    """New-session re-registration (VERDICT r7 #5): with the catalog
-    entry gone but a complete _SUCCESS directory surviving, the CREATE
-    TABLE ... CLUSTERED BY/SORTED BY DDL path must re-register the
-    files WITHOUT re-running the build, the scan must still be
-    bucketed, and a _DERIVED_LAYOUT_VERSION bump must rebuild."""
-    import flink_ad_analytics_spark.queries as qmod
-
-    sf = _derived_fixture(spark, tmp_path)
-    calls = {"n": 0}
-
-    def build():
-        calls["n"] += 1
-        return (
-            spark.read.parquet(f"{sf}/orders.parquet")
-            .selectExpr("o_orderkey", "grp * 10 as derived")
-        )
-
-    t1 = qmod._coloc_derived(
-        spark, sf, "t8drv", "o_orderkey", ["orders"], build,
-        sort_col="o_orderkey",
-    )
-    assert t1.count() == 60 and calls["n"] == 1
-
-    # locate the table this fixture minted
-    wh = _warehouse(spark)
-    tables = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith("coloc_t8drv_")
-    ]
-    assert len(tables) == 1
-    table = tables[0]
-    loc = os.path.join(wh, table)
-    assert os.path.exists(os.path.join(loc, "_SUCCESS"))
-    # no build temp leftovers in the warehouse or the catalog
-    assert not [d for d in os.listdir(wh) if "__build_" in d]
-    assert not [
-        t.name for t in spark.catalog.listTables() if "__build_" in t.name
-    ]
-
-    # simulate a NEW SESSION: catalog forgets, files persist. DROP
-    # TABLE would delete managed files -- but this table is registered
-    # via CREATE ... LOCATION (external), so dropping keeps the files.
-    spark.sql(f"DROP TABLE {table}")
-    assert os.path.exists(os.path.join(loc, "_SUCCESS"))
-
-    t2 = qmod._coloc_derived(
-        spark, sf, "t8drv", "o_orderkey", ["orders"], build,
-        sort_col="o_orderkey",
-    )
-    assert t2.count() == 60
-    assert calls["n"] == 1, "re-register path must not rebuild"
-    # re-registered schema comes from the files on disk
-    assert dict(t2.dtypes)["derived"] == "bigint"
-    # the re-registered table still bucket-scans (self-join: 0 exchange)
-    j = t2.alias("a").join(
-        t2.alias("b").hint("shuffle_hash"), "o_orderkey"
-    )
-    j.collect()
-    plan = j._jdf.queryExecution().executedPlan().toString().split(
-        "== Initial Plan =="
-    )[0]
-    assert "Bucketed: true" in plan
-    assert "Exchange hashpartitioning" not in plan, plan[:2000]
-
-    # version bump: new tag, rebuild, old files untouched
-    orig_v = qmod._DERIVED_LAYOUT_VERSION
-    qmod._DERIVED_LAYOUT_VERSION = orig_v + 1_000
-    try:
-        t3 = qmod._coloc_derived(
-            spark, sf, "t8drv", "o_orderkey", ["orders"], build,
-            sort_col="o_orderkey",
-        )
-        assert calls["n"] == 2 and t3.count() == 60
-        assert os.path.exists(os.path.join(loc, "_SUCCESS"))
-    finally:
-        qmod._DERIVED_LAYOUT_VERSION = orig_v
-
-
-def test_coloc_derived_failed_build_cleans_up(spark, tmp_path):
-    """A build_fn that raises must propagate, leave no __build_ temp
-    dir or catalog entry, and not register the final table."""
-    import flink_ad_analytics_spark.queries as qmod
-
-    sf = _derived_fixture(spark, tmp_path)
-    name = f"t8bad{uuid.uuid4().hex[:6]}"
-
-    def bad_build():
-        raise RuntimeError("derive-boom")
-
-    with pytest.raises(RuntimeError, match="derive-boom"):
-        qmod._coloc_derived(
-            spark, sf, name, "o_orderkey", ["orders"], bad_build
-        )
-    wh = _warehouse(spark)
-    assert not [d for d in os.listdir(wh) if d.startswith(f"coloc_{name}_")]
-    assert not [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith(f"coloc_{name}_")
-    ]
-
-
-def test_coloc_derived_markerless_leftover_rebuilt(spark, tmp_path):
-    """A killed mid-write directory (no _SUCCESS) must be cleared and
-    rebuilt, never re-registered (stale-garbage guard)."""
-    import hashlib
-
-    import flink_ad_analytics_spark.queries as qmod
-
-    sf = _derived_fixture(spark, tmp_path)
-    stamps = content_stamp(os.path.join(sf, "orders.parquet"))
-    tag = hashlib.md5(
-        f"v{qmod._DERIVED_LAYOUT_VERSION}|{sf}|{stamps}|o_orderkey".encode()
-    ).hexdigest()[:10]
-    loc = os.path.join(_warehouse(spark), f"coloc_t8part_{tag}")
-    os.makedirs(loc, exist_ok=True)
-    with open(os.path.join(loc, "part-garbage"), "w") as f:
-        f.write("not parquet")
-
-    calls = {"n": 0}
-
-    def build():
-        calls["n"] += 1
-        return spark.read.parquet(f"{sf}/orders.parquet")
-
-    t = qmod._coloc_derived(
-        spark, sf, "t8part", "o_orderkey", ["orders"], build
-    )
-    assert calls["n"] == 1 and t.count() == 60
-    assert os.path.exists(os.path.join(loc, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(loc, "part-garbage"))
-
-
-# -- overload contracts ---------------------------------------------------------
-
-
-def test_market_share_from_partial_inputs_raise(spark):
-    from flink_ad_analytics_spark.queries import _market_share_from
-
-    li = spark.range(1).selectExpr("id as l_orderkey")
-    with pytest.raises(TypeError, match="orders_f"):
-        _market_share_from(li, orders=spark.range(1))
-
-
-def test_volume_shipping_from_partial_inputs_raise(spark):
-    from flink_ad_analytics_spark.queries import _volume_shipping_from
-
-    li = spark.range(1).selectExpr("id as l_orderkey")
-    with pytest.raises(TypeError, match="orders_f"):
-        _volume_shipping_from(li, supp=spark.range(1))

@@ -4,8 +4,8 @@ including at-least-once redelivery (planted duplicate deliveries
 collapse to the clean corpus) -- and the family queries served from
 the maintained tables equal the batch-served family.
 
-This closes the loop on the "ingest-paid rollup" doctrine
-(queries.py::_events_family_pre): at 100 TB the rollup is maintained
+This closes the loop on the rollup-serving path
+(queries.py::family_outputs_from): at 100 TB the rollup is maintained
 incrementally by exactly this job; the batch build is the
 backfill/recovery path. Both sides share the rollup DEFINITION
 (family_imp_pre_from / family_clk_pre_from), so parity here proves
@@ -23,13 +23,19 @@ from pyspark.sql import functions as F, types as T
 from flink_ad_analytics_spark.queries import (
     _family_counts,
     family_clk_pre_from,
-    family_counts_from,
     family_imp_pre_from,
+    family_outputs_from,
+    q_anomaly_alerts,
+    q_campaign_spend,
+    q_ctr_hourly,
+    q_engagement_hourly,
 )
+from flink_ad_analytics_spark.sources.batch import load_events
 from flink_ad_analytics_spark.streaming.jobs import (
     maintain_family_rollups,
     streaming_family_rollups,
 )
+from tests.conftest import SF_CORRECT, assert_df_equal
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -178,16 +184,12 @@ def test_served_family_equals_batch(maintained, group_col, day, with_spend):
     over the batch-built rollups: the serving layer cannot tell who
     built its tables."""
     kw = {"day": day, "with_spend": with_spend}
-    got = family_counts_from(
+    got = _family_counts(
         maintained["imp_pre"], maintained["clk_pre"], group_col, **kw
     )
     want = _family_counts(
-        {
-            "imp_pre": maintained["batch_imp_pre"],
-            "clk_pre": maintained["batch_clk_pre"],
-        },
-        group_col,
-        **kw,
+        maintained["batch_imp_pre"], maintained["batch_clk_pre"],
+        group_col, **kw,
     )
     cols = [group_col, "impression_count", "click_count"] + (
         ["spend"] if with_spend else []
@@ -196,6 +198,21 @@ def test_served_family_equals_batch(maintained, group_col, day, with_spend):
     want_p = _flat(want.withColumnRenamed("ww", "w"), cols)
     assert len(want_p) > 10
     pd.testing.assert_frame_equal(got_p, want_p, check_dtype=False)
+
+
+def test_family_outputs_equal_flat_queries(spark):
+    """The four outputs served from batch-built rollups equal the flat
+    q_* entries on the sf0.01 corpus: the rollup-serving path is one
+    more plan for the same answers, not a second definition."""
+    ev = load_events(spark, SF_CORRECT)
+    got = family_outputs_from(family_imp_pre_from(ev), family_clk_pre_from(ev))
+    for name, flat in (
+        ("ctr_hourly", q_ctr_hourly),
+        ("engagement_hourly", q_engagement_hourly),
+        ("campaign_spend", q_campaign_spend),
+        ("anomaly_alerts", q_anomaly_alerts),
+    ):
+        assert_df_equal(got[name], flat(spark, SF_CORRECT), name)
 
 
 def test_restart_from_checkpoint_completes(spark, tmp_path):

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Round-9 experiment harness for VERDICT r8 item 2: where do flat
 market_share's sf10 seconds go, and which plan shape gets it under
-1.8s steady without touching the persisted coloc layout?
+1.8s steady?
 
 Candidates (each timed with the query_floor 1-cold + 2-steady
 protocol, min(steady) reported):
@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, functions as F  # noqa: E402
 from bench import materialize  # noqa: E402
 from flink_ad_analytics_spark.queries import (  # noqa: E402
     _cents,
-    _market_share_from,
     q_market_share,
 )
 from flink_ad_analytics_spark.session import build_session  # noqa: E402
@@ -150,7 +149,13 @@ def cand_join_count(spark, sf_dir):
 
 def cand_prune_first(spark, sf_dir):
     t = _tables(spark, sf_dir)
-    return _market_share_from(t["li"], orders_f=_orders_f_prune_first(t))
+    of = _orders_f_prune_first(t)
+    return _finish(
+        _li_n(t).join(of.hint("shuffle_hash"),
+                      F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy(F.spark_partition_id().alias("__pid"), "o_year", "nation")
+        .agg(F.sum("rev_e4").alias("p_rev"))
+    )
 
 
 def cand_preagg(spark, sf_dir):
