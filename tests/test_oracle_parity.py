@@ -6,11 +6,31 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from flink_ad_analytics_spark.queries import (
+    family_clk_pre_from,
+    family_imp_pre_from,
+    family_outputs_from,
+)
+from flink_ad_analytics_spark.sources.batch import load_events
 from tests.conftest import SF_CORRECT
 from tests.oracle import compare, duckdb_connection
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
+
+# The four ad reports served from the events rollups (family_outputs_from
+# over batch-built family_imp_pre_from/family_clk_pre_from): no queries()
+# entry of their own, each checked against its flat report's oracle.
+FAMILY = {
+    f"{flat}_family": flat
+    for flat in (
+        "ctr_hourly",
+        "engagement_hourly",
+        "campaign_spend",
+        "anomaly_alerts",
+    )
+}
+assert not set(FAMILY) & set(QUERIES)
 
 
 @pytest.fixture(scope="module")
@@ -20,8 +40,16 @@ def con():
     c.close()
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
+@pytest.mark.parametrize("name", sorted([*QUERIES, *FAMILY]))
 def test_query_matches_oracle(spark, con, name):
+    if name in FAMILY:
+        flat = FAMILY[name]
+        ev = load_events(spark, SF_CORRECT)
+        df = family_outputs_from(
+            family_imp_pre_from(ev), family_clk_pre_from(ev)
+        )[flat]
+        compare(df, con, ORACLES[flat], name=name)
+        return
     df = QUERIES[name](spark, SF_CORRECT)
     if name in ORACLES:
         compare(df, con, ORACLES[name], name=name)
