@@ -278,7 +278,28 @@ def ivf_kmeans_topk(
 #: whose exact d2 could win (including exact 12dp ties, which must
 #: reach the cid tie-break) therefore sit within 2 * 1e-11 of the
 #: double minimum -- five orders of magnitude inside this margin.
+#:
+#: Domain precondition of the exact fold (here and in `_DIST2_FOLD`):
+#: each squared coordinate difference is cast to DECIMAL(20,16), which
+#: holds values below 10^4, so the fold is defined for |x - y| < 100 in
+#: every coordinate. Past that the cast overflows. Under ANSI (which
+#: `session.ENGINE_RUNTIME_CONF` pins) the overflow raises, so each form
+#: either raises or returns the exact winner; the prescreen form can
+#: still answer where only far, non-surviving centroids overflow.
+#: Without ANSI the overflow turns into a NULL distance and a NULL-d2
+#: row can win the argmin, so `_assign_to_init` and its reference form
+#: refuse to run on a non-ANSI session (`_require_ansi`).
 _PRESCREEN_EPS = "1.0E-6"
+
+
+def _require_ansi(spark) -> None:
+    """Raise ValueError unless ANSI mode is on (see `_PRESCREEN_EPS`)."""
+    if spark.conf.get("spark.sql.ansi.enabled", "true").lower() != "true":
+        raise ValueError(
+            "exact centroid distances need spark.sql.ansi.enabled=true: "
+            "without it a DECIMAL(20,16) overflow (|x - y| >= 100) "
+            "becomes a NULL distance instead of an error"
+        )
 
 
 def _dbl_arr_sql(vals) -> str:
@@ -383,6 +404,7 @@ def _assign_to_init(
     the whole argmin per field). Value-identical to the window form --
     `_assign_to_init_reference` keeps that form as the test anchor
     (test_assign_prescreen_matches_reference)."""
+    _require_ansi(emb.sparkSession)
     cents = _collect_init_centroids(emb, k, id_col, vec_col, seed)
     if not cents:
         return emb.sparkSession.createDataFrame(
@@ -409,6 +431,7 @@ def _assign_to_init_reference(
     decimal fold for every (vector, centroid) pair, per-id rank
     window). Mirrors the DuckDB oracle's shape one-to-one; kept as the
     equality anchor the prescreen form is tested against."""
+    _require_ansi(emb.sparkSession)
     cents = hash_sampled_centroids(emb, k, id_col, vec_col, seed).select(
         "centroid_id",
         F.expr("transform(centroid, x -> CAST(x AS DOUBLE))").alias("centroid"),

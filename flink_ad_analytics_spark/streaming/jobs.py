@@ -38,19 +38,43 @@ over a union of marker rows (SURVEY.md §7.4#1):
   as batch ``ctr_windows`` does (an equi-join of separate impression
   and click counts on the group key would drop them).
 
-Physical plan of the default FK-key query: 5 stateful operators -- the
-impression dedup (planned once per consumer: the union and the join),
-the click dedup, the interval join and the aggregate
+Physical plan of the default FK-key query: 5 stateful operators -- two
+impression dedups (one per consumer: the union's keyed by (id, group),
+the join's by id), the click dedup, the interval join and the aggregate
 (tests/test_streaming.py::test_streaming_ctr_equals_batch pins the
-inventory). The non-FK key adds the fan-out dedup. A checkpoint written
-by an earlier plan that merged separate impression and click aggregates
-with a second join CANNOT be resumed by this plan: the stateful-operator
-layout differs, so such a query must restart from a fresh checkpoint.
+inventory). The non-FK key adds the fan-out dedup.
+
+Why the two impression dedups have different keys: a DataFrame used by
+two consumers is planned twice, and when the two dedups were keyed
+alike their input exchanges were equal. Spark's exchange reuse then
+fed the second dedup from a ReusedExchange, a leaf behind which the
+watermark propagation finds no event-time input, so that dedup's
+eviction watermark stayed 0 and its state grew with every impression
+seen (all 45,001 of a 900 s test fixture, still held after the
+far-future sentinel). Whether the exchanges came out equal depended on
+incidental projections: the engagement query (segment tag before the
+dedup) hit it in every trigger; the CTR query escaped only because an
+alias in one branch made its two exchanges differ.
+Keying the marker-row dedup by (id, group) -- the grain at which batch
+``ctr_windows`` counts distinct ids -- makes the exchanges differ by
+construction; the results are the same for exact redeliveries.
+tests/test_streaming.py::_assert_state_evicted checks every operator
+of both stage-1 queries after the sentinel.
+
+Checkpoints: one written by an earlier plan -- one that merged separate
+impression and click aggregates with a second join, or one whose
+marker-row dedup was keyed by id alone -- CANNOT be resumed by this
+plan: the stateful-operator layout or state schema differs, so such a
+query must restart from a fresh checkpoint.
 
 Scale notes: each stateful op keeps watermark-bounded state (dedup:
 one entry per id inside the watermark; join: band+watermark TTL,
 derived automatically from the time-range condition; aggregate: open
-windows only). With RocksDB state store
+windows only), and every operator evicts behind the watermark (pinned
+by the test above and by ``metrics.eviction_alerts``). A commit costs
+about the state it writes: sessions from ``session.build_session``
+write checkpoints through the FileSystem-based checkpoint manager (see
+``streaming/state.py``). With RocksDB state store
 (`spark.sql.streaming.stateStore.providerClass`) state spills to disk,
 so key cardinality is bounded by retention, not memory.
 """
@@ -79,7 +103,14 @@ def streaming_ctr_windows(
     Output matches the batch ``ctr_windows`` schema: window_start,
     window_end, <group_key>, impression_count, click_count, ctr.
     """
+    # The impressions are deduped twice, once per consumer, and the two
+    # dedups must not be keyed alike: on equal keys their input
+    # exchanges are equal, Spark reuses one for the other, and the dedup
+    # above the ReusedExchange never receives a watermark, so it never
+    # evicts (see the module docstring). The marker-row dedup is keyed
+    # by (id, group), the grain batch ``ctr_windows`` counts ids at.
     imp_d = impressions.dropDuplicatesWithinWatermark([imp_id])
+    imp_marked = impressions.dropDuplicatesWithinWatermark([imp_id, group_key])
     clk_d = clicks.dropDuplicatesWithinWatermark([click_id])
 
     i = imp_d.alias("i")
@@ -108,7 +139,7 @@ def streaming_ctr_windows(
 
     # One aggregate over both row kinds: an impression row marks (1, 0),
     # a matched-click row (0, 1).
-    imp_rows = imp_d.select(
+    imp_rows = imp_marked.select(
         F.window(F.col(imp_time), window).alias("w"),
         F.col(group_key),
         F.lit(1).alias("__imp"),

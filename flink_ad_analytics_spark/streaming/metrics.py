@@ -77,6 +77,7 @@ def last_quality(progress: dict, name: str = QUALITY_OBSERVATION) -> dict | None
 
 import json
 import threading
+from datetime import datetime
 
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -210,6 +211,8 @@ def health_alerts(
     *,
     max_state_rows: int | None = None,
     min_processed_rows_per_second: float | None = None,
+    progress: list[dict] | None = None,
+    retention_ms: int | None = None,
 ) -> list[dict]:
     """Turn a QueryMetricsRecorder.summary() into alert rows -- the
     rule layer a pager hangs off. Rules are deliberately dumb
@@ -219,7 +222,10 @@ def health_alerts(
     * state growth: max_state_rows exceeded -> suspect a missing/too-
       lax watermark (unbounded state is the classic streaming leak);
     * throughput: peak processed rate below the floor -> the job is
-      not keeping up with its source.
+      not keeping up with its source;
+    * eviction (needs ``progress`` and ``retention_ms``): see
+      ``eviction_alerts``. A fixed row threshold cannot tell a leak
+      from a large but bounded state; this rule can.
     """
     alerts: list[dict] = []
     for name, s in summary.items():
@@ -245,4 +251,61 @@ def health_alerts(
                     "threshold": min_processed_rows_per_second,
                 }
             )
+    if progress is not None and retention_ms is not None:
+        alerts += eviction_alerts(progress, retention_ms)
+    return alerts
+
+
+def _epoch_ms(ts: str | None) -> int | None:
+    """Progress timestamps ('2024-01-01T00:00:00.000Z') as epoch ms."""
+    if not ts:
+        return None
+    dt = datetime.fromisoformat(ts.replace("Z", "+00:00"))
+    return int(dt.timestamp() * 1000)
+
+
+def eviction_alerts(progress: list[dict], retention_ms: int) -> list[dict]:
+    """STATE_NOT_EVICTED for each stateful operator whose state outlives
+    the watermark.
+
+    ``progress`` holds StreamingQueryProgress dicts (``q.recentProgress``
+    entries, one or more queries); ``retention_ms`` is the longest time
+    any operator may keep a row past its event time as the watermark
+    sees it (watermark delay + join band + window, say). Once a
+    trigger's watermark is ``retention_ms`` past the earliest event time
+    the query has reported, the oldest rows must have left every
+    operator's state. An operator is flagged if its ``numRowsRemoved``
+    is 0 in every trigger while its ``numRowsTotal`` holds rows and has
+    never shrunk. Operators are matched across triggers by their
+    position in ``stateOperators``, which a query's plan fixes.
+    """
+    by_query: dict[str, list[dict]] = {}
+    for p in progress:
+        by_query.setdefault(p.get("name") or p.get("id"), []).append(p)
+    alerts: list[dict] = []
+    for name, ps in by_query.items():
+        ps = sorted(ps, key=lambda p: p.get("batchId", 0))
+        event_time = [p.get("eventTime") or {} for p in ps]
+        times = [t for e in event_time if (t := _epoch_ms(e.get("min"))) is not None]
+        if not times or not any(
+            (_epoch_ms(e.get("watermark")) or 0) >= min(times) + retention_ms
+            for e in event_time
+        ):
+            continue
+        n_ops = min(len(p.get("stateOperators") or []) for p in ps)
+        for k in range(n_ops):
+            ops = [p["stateOperators"][k] for p in ps]
+            first, last = ops[0].get("numRowsTotal", 0), ops[-1].get("numRowsTotal", 0)
+            if last > 0 and last >= first and not any(
+                o.get("numRowsRemoved", 0) for o in ops
+            ):
+                alerts.append(
+                    {
+                        "query": name,
+                        "alert": "STATE_NOT_EVICTED",
+                        "operator": f"{k}:{ops[-1].get('operatorName')}",
+                        "observed": last,
+                        "threshold": 0,
+                    }
+                )
     return alerts

@@ -420,6 +420,66 @@ def test_assign_prescreen_matches_reference(spark):
     assert got_t == ref_t and len(got_t) == 50
 
 
+def test_assign_decimal_domain_edge(spark):
+    """The exact fold casts each squared coordinate difference to
+    DECIMAL(20,16), so its domain is |x - y| < 100 per coordinate. At
+    and past that edge, under the engine's ANSI conf, each form raises
+    or returns the exact winner -- never a NULL-d2 row -- and the two
+    agree whenever both answer. Without ANSI the overflow would be a
+    NULL distance, so both forms refuse to run."""
+    from flink_ad_analytics_spark.operators.clustering import (
+        _assign_to_init,
+        _assign_to_init_reference,
+    )
+
+    schema = "vec_id long, embedding array<float>"
+
+    def run(assign, emb, k):
+        try:
+            rows = sorted(
+                tuple(r) for r in assign(emb, k, "vec_id", "embedding", 11).collect()
+            )
+        except Exception as e:  # the JVM's ArithmeticException, via Py4J
+            assert "NUMERIC_VALUE_OUT_OF_RANGE" in str(e), e
+            return None
+        assert rows and all(d2 is not None for _, _, d2 in rows), rows
+        return rows
+
+    def both(emb, k):
+        return run(_assign_to_init, emb, k), run(_assign_to_init_reference, emb, k)
+
+    # Just inside: 99.5^2 = 9900.25 fits, and the forms agree.
+    inside = spark.createDataFrame([(0, [0.0, 0.0]), (1, [99.5, 0.0])], schema)
+    got, ref = both(inside, 1)
+    assert got == ref and [float(d2) for _, _, d2 in got] in ([0.0, 9900.25],
+                                                             [9900.25, 0.0])
+    # On the edge: a gap of exactly 100 overflows in both forms.
+    edge = spark.createDataFrame([(0, [0.0, 0.0]), (1, [100.0, 0.0])], schema)
+    assert both(edge, 1) == (None, None)
+    # Two clusters 1,000 apart: every far pair is out of the domain.
+    # k=2 samples both centroids from one cluster, so points of the other
+    # overflow in both forms; at k=3 and k=4 every point has a centroid
+    # in range, and the prescreen form answers where the reference form
+    # (which scores every pair) raises.
+    far = spark.createDataFrame(
+        [(i, [float((i % 2) * 1000 + (i % 7) * 7), 1.0]) for i in range(20)], schema
+    )
+    for k in (2, 3, 4):
+        got, ref = both(far, k)
+        if got is not None and ref is not None:
+            assert got == ref, k
+    assert both(far, 3)[0] is not None
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        for assign in (_assign_to_init, _assign_to_init_reference):
+            with pytest.raises(ValueError, match="ansi"):
+                assign(edge, 1, "vec_id", "embedding", 11)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_fp_assign_inline_matches_reference(spark):
     """The r13 literal-argmin fixed-point assignment (`_fp_assign`:
     one bound integer-distance array per row, array_position

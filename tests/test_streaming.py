@@ -138,6 +138,30 @@ def _streamed_ctr(spark, table: str):
     )
 
 
+#: Longest time stage 1 keeps a row past its event time as the watermark
+#: sees it: the watermark delay (5 s), the join band and the window.
+STAGE1_RETENTION_MS = (5 + 600 + 60) * 1000
+
+
+def _assert_state_evicted(q, *, sentinel_rows: int = 2):
+    """After the sentinel every stateful operator of ``q`` has removed
+    rows, and its state holds no more than the sentinel's impression and
+    click: the watermark has passed everything else by more than
+    ``STAGE1_RETENTION_MS``. An operator whose watermark never reaches
+    it (a leak: results stay exact, state grows with the stream) fails
+    here and trips the ``STATE_NOT_EVICTED`` health rule."""
+    from flink_ad_analytics_spark.streaming.metrics import health_alerts
+
+    progress = q.recentProgress
+    for k, final in enumerate(progress[-1]["stateOperators"]):
+        removed = sum(p["stateOperators"][k]["numRowsRemoved"] for p in progress)
+        assert removed > 0, (k, final)
+        assert final["numRowsTotal"] <= sentinel_rows, (k, final)
+    assert health_alerts(
+        {}, progress=progress, retention_ms=STAGE1_RETENTION_MS
+    ) == []
+
+
 def _memory_query(result, name: str, checkpoint: str):
     return (
         result.writeStream.format("memory")
@@ -160,15 +184,17 @@ def test_streaming_ctr_equals_batch(spark, stream_fixture):
     batch = _batch_ctr(spark, sf["fx"].impressions, sf["fx"].clicks)
     pd.testing.assert_frame_equal(streamed, batch, check_dtype=False)
 
-    # Operator inventory of the FK-key plan: the impression dedup (planned
-    # once per consumer: the union and the join), the click dedup, one
-    # interval join and one aggregate over the union of impression and
-    # matched-click rows. A second join here would mean the counts are
-    # merged by an aggregate-join-aggregate plan again.
+    # Operator inventory of the FK-key plan: two impression dedups (one
+    # per consumer: the union's keyed by (id, group), the join's by id),
+    # the click dedup, one interval join and one aggregate over the
+    # union of impression and matched-click rows. A second join here
+    # would mean the counts are merged by an aggregate-join-aggregate
+    # plan again.
     ops = sorted(s["operatorName"] for s in q.lastProgress["stateOperators"])
     assert ops == ["dedupeWithinWatermark"] * 3 + [
         "stateStoreSave", "symmetricHashJoin",
     ], ops
+    _assert_state_evicted(q)
 
 
 def test_streaming_ctr_nonfk_key_equals_batch(spark, stream_fixture):
@@ -189,6 +215,7 @@ def test_streaming_ctr_nonfk_key_equals_batch(spark, stream_fixture):
     # dedup were dropped, click_count would exceed the distinct count
     assert batch["click_count"].sum() > 0
     pd.testing.assert_frame_equal(streamed, batch, check_dtype=False)
+    _assert_state_evicted(q)
 
 
 def test_streaming_ctr_duplicate_delivery_equals_batch(spark, stream_fixture, tmp_path):

@@ -130,3 +130,58 @@ def test_health_alerts_rules():
     kinds = {(a["query"], a["alert"]) for a in alerts}
     assert kinds == {("leaky", "STATE_GROWTH"), ("slow", "THROUGHPUT_FLOOR")}
     assert health_alerts(summary) == []  # no thresholds -> no alerts
+
+
+def _progress(name, batch, watermark, ops, t_min="2024-01-01T00:00:00.000Z"):
+    """A StreamingQueryProgress dict with the fields the eviction rule
+    reads; ``ops`` holds (numRowsTotal, numRowsRemoved) per operator."""
+    return {
+        "name": name,
+        "batchId": batch,
+        "eventTime": {"min": t_min, "watermark": watermark},
+        "stateOperators": [
+            {"operatorName": "dedupeWithinWatermark", "numRowsTotal": t,
+             "numRowsRemoved": r}
+            for t, r in ops
+        ],
+    }
+
+
+def test_eviction_alert_rule():
+    """STATE_NOT_EVICTED fires for the operator that holds rows and
+    never removes any once the watermark is past retention, and only
+    then -- the leak shape a fixed STATE_GROWTH threshold misses."""
+    from flink_ad_analytics_spark.streaming.metrics import health_alerts
+
+    epoch = "1970-01-01T00:00:00.000Z"
+    early = "2024-01-01T00:00:30.000Z"  # 30 s past the earliest event
+    late = "2024-01-01T03:00:00.000Z"
+    leak = [
+        _progress("q", 0, epoch, [(100, 0), (100, 0)]),
+        _progress("q", 1, early, [(180, 20), (180, 0)]),
+        _progress("q", 2, late, [(1, 179), (180, 0)]),
+    ]
+    minute = 60_000
+    alerts = health_alerts({}, progress=leak, retention_ms=minute)
+    assert alerts == [
+        {"query": "q", "alert": "STATE_NOT_EVICTED",
+         "operator": "1:dedupeWithinWatermark", "observed": 180, "threshold": 0}
+    ]
+    # A large threshold rule cannot see it: 180 rows is small.
+    summary = {"q": {"batches": 3, "max_state_rows": 181,
+                     "max_processed_rows_per_second": 1.0}}
+    assert health_alerts(summary, max_state_rows=1_000) == []
+    # The watermark has not yet passed retention: no verdict.
+    assert health_alerts({}, progress=leak[:2], retention_ms=minute) == []
+    # An operator that evicts once, or holds nothing, is healthy.
+    healthy = [
+        _progress("q", 0, epoch, [(100, 0), (0, 0)]),
+        _progress("q", 1, late, [(1, 99), (0, 0)]),
+    ]
+    assert health_alerts({}, progress=healthy, retention_ms=minute) == []
+    # Without retention_ms the rule is off.
+    assert health_alerts({}, progress=leak) == []
+    # Queries are judged separately, by name.
+    other = [_progress("r", 0, late, [(5, 0)])]
+    assert {a["query"] for a in health_alerts(
+        {}, progress=leak + other, retention_ms=minute)} == {"q", "r"}

@@ -22,7 +22,12 @@ from flink_ad_analytics_spark.streaming.jobs import (
     streaming_engagement_windows,
 )
 from flink_ad_analytics_spark.streaming.sources import file_event_stream
-from tests.test_streaming import SENTINEL_MS, _sentinel_clk, _sentinel_imp
+from tests.test_streaming import (
+    SENTINEL_MS,
+    _assert_state_evicted,
+    _sentinel_clk,
+    _sentinel_imp,
+)
 
 
 @pytest.fixture(scope="module")
@@ -81,6 +86,14 @@ def test_restart_from_checkpoint_completes(spark, fx, tmp_path):
     q.processAllAvailable()
     q.stop()  # simulated failure/redeploy
 
+    # Crash window: the last batch wrote its state deltas but died before
+    # its commit-log entry. The restart re-executes that batch and
+    # rewrites the existing deltas (createAtomic with overwrite).
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+
     imp.iloc[half_i:].to_parquet(f"{imp_dir}/part-1.parquet", index=False)
     clk.iloc[half_c:].to_parquet(f"{clk_dir}/part-1.parquet", index=False)
     _sentinel_imp().to_parquet(f"{imp_dir}/part-2.parquet", index=False)
@@ -89,6 +102,7 @@ def test_restart_from_checkpoint_completes(spark, fx, tmp_path):
     q2 = start()
     q2.processAllAvailable()
     q2.stop()
+    assert q2.recentProgress[0]["batchId"] == last  # re-executed, not skipped
 
     got = (
         spark.read.parquet(out)
@@ -116,6 +130,26 @@ def test_restart_from_checkpoint_completes(spark, fx, tmp_path):
     )
     pd.testing.assert_frame_equal(got[batch.columns], batch, check_dtype=False)
 
+    # Checkpoint integrity: every state delta carries Spark's checkpoint
+    # checksum (<v>.delta.crc) and Hadoop's .crc of each file.
+    files = set(os.listdir(os.path.join(ckpt, "state", "0", "0")))
+    deltas = sorted(f for f in files if f.endswith(".delta"))
+    assert len(deltas) > last + 1, files
+    for d in deltas:
+        assert {f"{d}.crc", f".{d}.crc", f".{d}.crc.crc"} <= files, (d, files)
+
+    # The engine's own (local) session writes checkpoints through the
+    # FileSystem-based manager; a handed session keeps Spark's default,
+    # because the key is a build-time conf, not a runtime one.
+    from flink_ad_analytics_spark.session import ENGINE_RUNTIME_CONF
+
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    resolved = manager.create(jvm.org.apache.hadoop.fs.Path(f"file:{ckpt}"), hadoop_conf)
+    assert resolved.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    assert "spark.sql.streaming.checkpointFileManagerClass" not in ENGINE_RUNTIME_CONF
+
 
 def test_streaming_engagement_equals_batch(spark, fx, tmp_path):
     """The engagement job's streaming form == batch, including the
@@ -139,6 +173,9 @@ def test_streaming_engagement_equals_batch(spark, fx, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
+    # every operator evicts behind the watermark, the join-side
+    # impression dedup included
+    _assert_state_evicted(q)
     # sentinel excluded by time bound (its device_type collides with
     # real segments, so filtering by campaign/device would be wrong)
     streamed = (
