@@ -1,4 +1,4 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Runtime entry module of the engine.
 
 ``entry(spark)`` runs the flagship CTR query on sf0.001;
 ``queries()``/``oracle_sql()`` expose every implemented operator from
@@ -13,167 +13,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_ad_analytics_spark.queries import RELATIONAL_QUERIES
+from flink_ad_analytics_spark.queries_ext import EXTENSION_QUERIES
+from flink_ad_analytics_spark.queries_pipeline import PIPELINE_QUERIES
 
-try:  # extension operators land incrementally; keep entry importable
-    from flink_ad_analytics_spark.queries_ext import EXTENSION_QUERIES
-except ImportError:  # pragma: no cover
-    EXTENSION_QUERIES: dict[str, tuple] = {}
-
-try:
-    from flink_ad_analytics_spark.queries_pipeline import PIPELINE_QUERIES
-except ImportError:  # pragma: no cover
-    PIPELINE_QUERIES: dict[str, tuple] = {}
-
-# --- driver correctness-window ordering (r11 verdict item 1 + ADVICE) ------
-#
-# The grading driver oracles only the FIRST 50 keys of ``queries()``.  To
-# give every declared query an independent driver-verified row as fast as
-# possible, order ``_ALL`` as:
-#   1. every query that has NEVER appeared in a committed driver
-#      CORRECTNESS_r*.json window, in a deterministic round-robin
-#      interleave of the EXTENSION / PIPELINE / RELATIONAL families;
-#   2. then every query whose semantics-bearing operator code changed in
-#      r12/r13 (``_RETOUCHED``) -- r12 verdict item 2: a query whose
-#      expressions changed must re-enter the window even if an older
-#      round already verified it, so the driver re-oracles the CURRENT
-#      code, not the code that earned the original row;
-#   3. then the remaining already-verified queries, same interleave
-#      order.
-# ``_DRIVER_VERIFIED`` is an EXPLICIT COMMITTED CONSTANT -- the union of
-# the key sets of CORRECTNESS_r01..r13.json -- bumped intentionally each
-# round by appending the new round's window keys (ADVICE r11: deriving
-# the ordering from artifact-file globbing made a fresh clone of HEAD and
-# the local tree disagree whenever the round's own artifact was
-# untracked; a source-level constant cannot drift).  The r13 window
-# was the full remaining first-time set (34 queries) plus 16 retouched
-# re-verification slots; with its keys added, all 175 declared queries
-# are verified and none is pending, so the window opens with the
-# retouched tier.
-
-_DRIVER_VERIFIED = frozenset((
-    "above_average_orders", "ann_cosine_topk", "ann_filtered_topk",
-    "ann_ivf_topk", "anomaly_alerts", "c4_quality",
-    "campaign_reach", "campaign_spend", "campaign_spend_gapfill",
-    "classifier_scores", "click_attribution_asof", "containment_pairs",
-    "corpus_diff", "ctr_hourly", "customer_value_ranks",
-    "customers_without_orders", "daily_funnel_fullouter", "data_quality",
-    "dedup_clusters", "dedup_clusters_best", "dedup_clusters_star",
-    "dedup_embedding_cosine", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_prefix_filter", "dedup_simhash_pairs",
-    "dedup_verify_editdist_topk", "disjunctive_revenue", "domain_blocklist",
-    "domain_caps", "domain_reputation", "dominant_suppliers",
-    "engagement_hourly", "event_bursts", "events_json_stats",
-    "heavy_hitter_users", "hopping_daily_actives", "idle_customer_balance",
-    "incremental_dedup", "kcenter_coreset", "key_part_concentration",
-    "knn_graph_edges", "knn_graph_pagerank", "lang_id_confusion",
-    "large_volume_customers", "latest_user_event", "lineitem_cube",
-    "lineitem_unpivot", "local_supplier_volume", "min_cost_supplier",
-    "multimodal_decode", "multimodal_meta", "multimodal_phash",
-    "nation_coverage", "nation_revenue_salted", "orc_corpus_stats",
-    "order_count_distribution", "order_priority_pivot", "order_rollup",
-    "order_seasonality", "order_value_percentiles",
-    "order_value_percentiles_approx",
-    "part_supplier_variety", "pcm_frame_stats", "pcm_frame_stats_arrow",
-    "pricing_summary", "priority_history_scd2", "priority_late_counts",
-    "product_profit", "promo_revenue", "returned_items",
-    "rolling_user_value", "semantic_dedup", "sequence_packing",
-    "shipmode_priority", "shipping_priority", "simhash_signatures",
-    "sliding_event_counts", "small_qty_revenue", "sole_late_suppliers",
-    "text_quality", "top_orders_per_customer", "top_revenue_supplier",
-    "urgent_undelivered", "url_canonicalize", "url_dedup",
-    "user_funnel_cep", "user_sessions", "volume_shipping",
-    "zorder_buckets",
-    # --- r12 window (CORRECTNESS_r12.json, 50/50 green) ---
-    "ann_ivf_kmeans", "ann_pq_topk", "ann_quantized_topk",
-    "ann_topk_vectorized", "bpe_segment", "bpe_top_pairs", "bpe_vocab",
-    "capped_sessions", "char_stats", "count_zscore_alerts",
-    "curated_corpus", "dataset_splits", "decontaminated",
-    "decontaminated_bloom", "dedup_verify_editdist", "dsir_selection",
-    "embedding_quantization", "event_type_pivot", "gopher_quality",
-    "hard_negatives", "k_anonymity_audit", "kcenter_coverage",
-    "kfold_balance", "kmeans_clusters", "kmeans_fit", "kmeans_step",
-    "kmeans_update", "multimodal_frames", "multimodal_resize",
-    "negative_samples", "pii_redaction", "pq_codebook_fit", "pq_codes",
-    "price_band_peers", "priority_grouping_sets", "quality_ensemble",
-    "quality_weighted_sample", "rebalanced_mix", "repetition_quality",
-    "semantic_decontamination", "shingle_novelty", "span_dedup",
-    "split_contamination", "stratified_sample", "temperature_mix",
-    "token_budget", "tokenizer_fertility", "top_terms",
-    "user_erasure_audit", "window_dedup",
-    # --- r13 window (CORRECTNESS_r13.json, 50/50 green) ---
-    "ann_ivf_absorb", "ann_ivf_drift", "anomaly_alerts_coloc",
-    "anomaly_alerts_family", "bm25_search", "campaign_spend_coloc",
-    "campaign_spend_family", "corpus_shuffle", "ctr_hourly_coloc",
-    "ctr_hourly_family", "doc_chunks", "embedding_coverage",
-    "engagement_hourly_coloc", "engagement_hourly_family",
-    "forecast_revenue_change", "group_reservoir", "length_outliers",
-    "linear_attribution", "lm_quality", "market_share",
-    "market_share_coloc", "numeric_profile", "packing_offset",
-    "pit_feature_join", "position_attribution", "retention_cohorts",
-    "source_mix_weights", "table_profile", "table_profile_approx",
-    "table_profile_served", "tfidf_doc_pairs", "token_budget_mix",
-    "token_budget_shards", "volume_shipping_coloc",
-))
-
-#: Queries whose semantics-bearing operator code changed in r12 or r13
-#: (r12 verdict item 2): they re-enter the driver window right after the
-#: never-verified tier so the CURRENT expressions get a fresh oracle row.
-#: Order here is the window order (in the r13 window the never-verified
-#: tier filled 34 slots and these filled the rest).
-_RETOUCHED = (
-    # The r13 window held 50 - 34 never-verified = 16 retouched slots, so
-    # the tier is prioritized by SEMANTIC risk: queries whose r12/r13
-    # changes rewrote value-bearing EXPRESSIONS occupy the slots;
-    # plan-only r13 touches (REPARTITION_BY_NUM width pins, in-query
-    # checkpoint materializations on dedup_verify_editdist(_topk),
-    # hopping_daily_actives, dedup_minhash_lsh, incremental_dedup,
-    # dedup_clusters(_star/_best)) cannot change values by
-    # construction, already carry driver rows from earlier rounds, and
-    # are value-re-proven by the committed 175/175 rehearsal -- they
-    # yield their slots to the expression-level set.
-    # r12 expression changes that missed the r12 window (verdict item
-    # 2's literal list; pcm_frame_stats_arrow is NOT here -- its Arrow
-    # decode is an independent path the r12 hex-conv change never
-    # touched):
-    "multimodal_phash", "pcm_frame_stats",
-    "dsir_selection", "shingle_novelty",
-    # r13 session-2 expression rewrites (assignment-family double
-    # prescreen, fixed-point literal argmin, single-pass md5 decode;
-    # ann_ivf_absorb/ann_ivf_drift are in the never-verified tier
-    # already):
-    "semantic_dedup", "pq_codes", "kmeans_step", "kmeans_update",
-    "kmeans_fit", "kmeans_clusters", "ann_ivf_kmeans",
-    "multimodal_decode", "multimodal_resize",
-    # r13 session-1 ANN payload-free prune rewrite (computation
-    # reordered, row-identical -- ann_filtered_topk rides the same
-    # cosine_topk core):
-    "ann_cosine_topk", "ann_ivf_topk", "ann_filtered_topk",
-)
-
-
-def _interleave(*families: dict) -> dict:
-    merged = {**RELATIONAL_QUERIES, **EXTENSION_QUERIES, **PIPELINE_QUERIES}
-    rr: list[str] = []
-    width = max((len(f) for f in families), default=0)
-    for i in range(width):
-        for fam in families:
-            keys = list(fam)
-            if i < len(keys) and keys[i] not in rr:
-                rr.append(keys[i])
-    order = [k for k in rr if k not in _DRIVER_VERIFIED]
-    order += [k for k in _RETOUCHED if k in _DRIVER_VERIFIED]
-    order += [
-        k for k in rr if k in _DRIVER_VERIFIED and k not in _RETOUCHED
-    ]
-    return {k: merged[k] for k in order}
-
-
-_ALL = _interleave(EXTENSION_QUERIES, PIPELINE_QUERIES, RELATIONAL_QUERIES)
+_ALL = {**RELATIONAL_QUERIES, **EXTENSION_QUERIES, **PIPELINE_QUERIES}
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (interval LEFT join + tumbling CTR) on sf0.001."""
-    fn, _ = _ALL["ctr_hourly"]
+    fn, _ = RELATIONAL_QUERIES["ctr_hourly"]
     return fn(spark, "/root/testdata/sf0.001")
 
 

@@ -28,10 +28,10 @@ from pyspark.sql import DataFrame
 FIT_ALGO_VERSION = 2  # r12: inverted lists carry the dist2 residual
 
 #: (kind, tag, seconds) of every fit_fn actually EXECUTED in this
-#: process (cache misses only). bench.py reads this to attribute
-#: one-time fit cost to the query that triggered it (refit_sec in the
-#: bench artifact), so a cache-tag change (new FIT_ALGO_VERSION, new
-#: corpus stamp) reads as ingest cost, not a serving regression --
+#: process (cache misses only). perfbench/run.py reads this to count
+#: the fits of set-up apart from the timed section (a fit there fails
+#: the run), so a cache-tag change (new FIT_ALGO_VERSION, new corpus
+#: stamp) reads as ingest cost, not a serving regression --
 #: BENCH_r07's +5s was exactly this ambiguity (VERDICT r7 #6).
 FIT_EVENTS: list[tuple[str, str, float]] = []
 

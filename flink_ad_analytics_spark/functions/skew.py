@@ -12,8 +12,8 @@ Use for large-x-small joins where broadcast is impossible (small side
 too big) and one key dominates. For large-x-large skew, prefer AQE or
 isolate the hot keys into a broadcast side-channel.
 
-Measured (tools/skew_bench.py, 40M rows, one key owning 50%, broadcast
-disabled, .benchmarks/skew_join.json): unmitigated SMJ 6.7s (one
+Measured (.benchmarks/skew_join.json: 40M rows, one key owning 50%,
+broadcast disabled): unmitigated SMJ 6.7s (one
 straggler task), AQE skew split 2.6s, salted_join(8) 3.5s -- identical
 checksums. AQE wins for sort-merge joins because SMJ can split WITHIN
 a hot key (rows of one key stay mergeable across partition splits), at

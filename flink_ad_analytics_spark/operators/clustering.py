@@ -882,6 +882,12 @@ def semantic_dedup(
     value-exact across engines. Zero-norm vectors (cosine undefined)
     never pair and are always kept.
 
+    Eager: the call runs a ``collect()`` of the hash-sampled init
+    centroids of ``emb`` and inlines them as literals, so the returned
+    DataFrame is a snapshot of the input's clustering at call time;
+    rows that reach ``emb``'s source later are clustered against the
+    old centroids.
+
     Output: (id, cluster_id, keep) -- filter keep for the survivors.
     """
     from .similarity import _dot, _dot_fast, _norm
@@ -1186,7 +1192,12 @@ def kmeans_fixedpoint_assign(
     extra: list[str] | None = None,
 ) -> DataFrame:
     """(id, extra..., cluster, dist2): exact integer assignment of the
-    full corpus against fixed-point centroids."""
+    full corpus against fixed-point centroids.
+
+    Eager: the call runs a ``collect()`` of ``cent`` and inlines its
+    rows as literals, so the returned DataFrame is a snapshot of the
+    centroids at call time; a later change to ``cent``'s source is
+    not seen. ``emb`` stays lazy."""
     qv = _fp_quantize(emb, id_col, vec_col, extra)
     return _fp_assign(qv, cent, id_col).select(
         id_col, *(extra or []), F.col("cid").alias("cluster"), "dist2"
@@ -1214,7 +1225,12 @@ def ivf_fixedpoint_assign(
     absorb contract -- a fresh shard's mean residual vs the fit-time
     standing mean is the drift signal ``ivf_drift_stats`` reports,
     with zero extra passes (the residual is computed during
-    assignment anyway)."""
+    assignment anyway).
+
+    Eager: the call runs a ``collect()`` of ``cent`` and inlines its
+    rows as literals, so the returned DataFrame is a snapshot of the
+    centroids at call time; a later change to ``cent``'s source is
+    not seen. ``emb`` stays lazy."""
     qv = _fp_quantize(emb, id_col, vec_col)
     return _fp_assign(qv, cent, id_col).select(
         F.col(id_col).alias("c_id"),
@@ -1295,10 +1311,10 @@ def ivf_fixedpoint_topk(
 
 #: Fresh-shard mean residual / fit-time standing mean residual above
 #: which the standing IVF is declared STALE and a refit is requested.
-#: MEASURED, not guessed: tools/ivf_drift_campaign.py perturbs a fresh
-#: shard by increasing noise amplitudes and records (drift_ratio,
-#: recall@5 of the fixed-centroid nprobe serve vs probing every list)
-#: per magnitude -- .benchmarks/ivf_drift_threshold.json. At 400
+#: MEASURED, not guessed (.benchmarks/ivf_drift_threshold.json): a
+#: campaign perturbed a fresh shard by increasing noise amplitudes and
+#: recorded (drift_ratio, recall@5 of the fixed-centroid nprobe serve
+#: vs probing every list) per magnitude. At 400
 #: queries / sf0.1: recall holds within 0.024 of the delta=0 level up
 #: to ratio 1.34, first material decay (-0.085) at ratio 2.37, and
 #: the refit branch recovers it (0.479 -> 0.571 there; 0.436 -> 0.779

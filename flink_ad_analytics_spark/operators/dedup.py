@@ -347,8 +347,8 @@ def prefix_filter_pairs(
 
 #: Exact-pairs regime selector (VERDICT r10 item 4: the measured
 #: crossover moves from docstring advice into a plan rule). The
-#: round-11 measurement campaign (tools/prefix_crossover.py ->
-#: .benchmarks/prefix_filter_crossover.json) overturned the round-10
+#: round-11 measurement campaign
+#: (.benchmarks/prefix_filter_crossover.json) overturned the round-10
 #: intuition: the decisive variable is NOT the threshold alone but
 #: the verify-cost asymmetry. The exhaustive inverted-index core is
 #: pure whole-stage-codegen integer work (~14 ns per candidate row on
@@ -584,7 +584,7 @@ def _signatures_from_shingles(sh: DataFrame, id_col: str) -> DataFrame:
     # Catalyst broadcast MILLIONS of posting rows and OOM the driver.
     # A forced shuffle-hash build of the vocabulary side OOMs too once
     # the vocabulary outgrows per-task memory (hit at 210k docs in
-    # bench_scale.py: "not enough memory to build hash map" -- hash
+    # the dedup scale sweep of .benchmarks/scale_curve.json: "not enough memory to build hash map" -- hash
     # builds cannot spill). Sort-merge spills to disk on both sides,
     # costs nothing measurable at bench scale, and is the only
     # strategy that is safe at every corpus size.
@@ -603,8 +603,8 @@ def minhash_lsh_candidates(
 
     The scale-defining intermediate of MinHash-LSH: candidate volume
     grows with per-band bucket collisions, not n^2. Exposed separately
-    so scale runs (bench_scale.py) can measure the candidate curve
-    directly.
+    so a scale sweep can measure the candidate curve directly
+    (.benchmarks/scale_curve.json).
     """
     sig = minhash_signatures(docs, id_col, text_col)
     bands = _lsh_bands(sig, id_col)
@@ -794,14 +794,15 @@ def simhash_pairs(
     complete-recall scheme.
 
     vs single-block banding (8-bit keys): measured ~8x fewer
-    candidates at 105k docs (bench_scale.py) -- 10-bit keys collide
+    candidates at 105k docs (.benchmarks/scale_curve.json) -- 10-bit keys collide
     ~2^10 less per table, with 12 tables instead of 8. Candidate
     volume is the scale lever: verification cost follows collisions
     per key, not n^2/2.
 
     NOTE: for ``max_hamming`` > 7 the guarantee lapses; the result is
-    then "candidates within max_hamming", which bench_scale.py uses
-    (max_hamming=64) to measure raw candidate volume.
+    then "candidates within max_hamming", which the scale sweep of
+    .benchmarks/scale_curve.json used (max_hamming=64) to measure raw
+    candidate volume.
     """
     sig = simhash_signatures(docs, id_col, text_col)
     tables = []

@@ -12,7 +12,7 @@ null count / typed min / typed max). Then:
 * exact distinct counts are NOT mergeable without the sketch -- the
   exact plan re-pays a full scan + distinct exchanges per refresh.
 
-Batch measurement: tools/table_profile_shard_merge.py (sf10: serve
+Batch measurement: .benchmarks/table_profile_shard_merge_sf10.json (sf10: serve
 0.42s = 6.6x vs exact recompute, 675 KB index for 15M rows, merged
 estimates within 1.41% of exact). Streaming maintenance:
 streaming/jobs.py::streaming_profile_index appends one index row per

@@ -520,8 +520,8 @@ def shingle_novelty(
     AQE skew-split CANNOT rescue this shape -- OptimizeSkewedJoin
     pattern-matches SMJ(Sort(ShuffleStage), Sort(ShuffleStage)) only,
     and the df side's final HashAggregate sits between its Sort and
-    the stage, so the rule never engages (tools/shingle_novelty_skew.py
-    proves it: a canonical two-table skew join fires skew=true in this
+    the stage, so the rule never engages (.benchmarks/shingle_novelty_skew.json
+    records it: a canonical two-table skew join fires skew=true in this
     exact session config; this operator's join never does). Two
     alternatives were therefore built and MEASURED
     (.benchmarks/shingle_novelty_skew.json, outputs equality-gated):
@@ -580,8 +580,8 @@ def shingle_novelty(
 
 #: Largest single-key posting count above which the hot-key reducer of
 #: the annotate join dominates the stage and the split path engages.
-#: Measured on the D-series crossover (tools/shingle_novelty_skew.py,
-#: .benchmarks/shingle_novelty_skew.json): annotate still wins at
+#: Measured on the D-series crossover
+#: (.benchmarks/shingle_novelty_skew.json): annotate still wins at
 #: max_df 300k (1.40s vs 1.62s), split wins at 600k (1.98s vs 2.14s);
 #: pin = midpoint. Local caveat recorded in the artifact: an
 #: identical-row hot key shuffles compressed ~100x, so the local

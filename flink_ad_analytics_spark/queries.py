@@ -632,7 +632,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact at ANY corpus size, which is exactly where the plain
     long-cents form failed (a single global accumulator wraps past
     ~2.3e9 rows/group, 100 TB territory). Measured sf10
-    (tools/decimal_bench.py, .benchmarks/decimal_longcents.json):
+    (.benchmarks/decimal_longcents.json):
     two_level 0.81s vs decimal 4.21s (5.2x) vs unguarded long_cents
     0.75s -- the two-level form recovers the integer-lattice speed
     the engine's BigDecimal path leaves on the table, with none of
@@ -1151,7 +1151,7 @@ def _volume_shipping_from(
     8%-sized sides -- still strictly better than filtering after the
     full join. The residual pair filter only removes (N1,N1)/(N2,N2).
 
-    Measured sf10 steady (tools/query_floor.py protocol): 2.85s (r4)
+    Measured sf10 steady (.benchmarks/query_floor_sf10.json): 2.85s (r4)
     -> 2.44s -- under the 2x-oracle bar (oracle 1.02s).
     """
     n1, n2 = "NATION_1", "NATION_2"
@@ -2836,7 +2836,7 @@ def q_table_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches only 0.89s). Measured sf10 steady: 3.41s -> 1.79s, vs
     the exact form's 3.2-3.5s floor -- the approx form now costs
     ~HALF the exact plan ON TOP of its mergeability story, which
-    tools/table_profile_shard_merge.py quantifies directly (serve a
+    .benchmarks/table_profile_shard_merge_sf10.json quantifies directly (serve a
     full-table profile from the standing per-shard sketch index
     without any rescan).
 
@@ -2900,7 +2900,8 @@ def q_table_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: hash-shard count for the standing profile index served by
-#: q_table_profile_served (matches tools/table_profile_shard_merge.py)
+#: q_table_profile_served (the n_shards of
+#: .benchmarks/table_profile_shard_merge_sf10.json)
 _PROFILE_INDEX_SHARDS = 16
 
 
@@ -2913,7 +2914,7 @@ def q_table_profile_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Steady state this is one aggregate over 16 tiny index rows: no
     corpus scan, no distinct-value exchanges, no Expand -- the cost
-    model tools/table_profile_shard_merge.py measured at sf10 (serve
+    model .benchmarks/table_profile_shard_merge_sf10.json records at sf10 (serve
     0.42s vs 3.53s exact recompute, 675 KB index for 15M rows, merged
     estimates within 1.41% of exact). Ingesting a new shard sketches
     only the new rows and appends one row (mergeability -- the
@@ -2984,7 +2985,7 @@ def q_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical in the oracle, and vacuous on the driver tables
     (tests/test_testdata_contract.py proves these columns null-free).
 
-    Round-8 hot-path swap (the decimal_bench two_level winner,
+    Round-8 hot-path swap (the two_level winner of
     .benchmarks/decimal_longcents.json: 5.2x over decimal sums on
     this shape's sibling): the moment sums accumulate as exact
     INTEGER partials per task -- values as cents (x100 longs),
@@ -3396,8 +3397,8 @@ def _market_share_from(
     """Shared Q8 plan over caller-supplied inputs.
 
     Round-9 flat rewrite (VERDICT r8 item 2; full 10-candidate
-    experiment matrix in tools/market_share_experiments.py, adjudicated
-    in .benchmarks/market_share_floor_sf10.json):
+    experiment matrix adjudicated in
+    .benchmarks/market_share_floor_sf10.json):
 
     * Region prune FIRST: the 5-row region-nation list broadcasts into
       the CUSTOMER scan, and the pruned ~20% of customers broadcasts
@@ -3703,7 +3704,7 @@ def family_outputs_from(
     (family_imp_pre_from / family_clk_pre_from over an events frame),
     or the streaming maintenance job's landed parquet
     (streaming/jobs.py::streaming_family_rollups -- the measured
-    serve-from-maintained path, tools/family_maintenance_bench.py).
+    serve-from-maintained path, .benchmarks/family_maintenance_sf0.1.json).
     Each output equals its flat q_* entry
     (tests/test_streaming_family_rollup.py)."""
     from .operators.engagement import _untag

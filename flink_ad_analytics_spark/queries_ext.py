@@ -1110,7 +1110,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 9 (shuffle audit): the split-tagged form computes the
     signature pipeline ONCE over the union and persists it as the
     standing signature index; the old two-filtered-frames form ran it
-    twice (13 executed exchanges -> see plan_audit executed_audit_r9;
+    twice (13 executed exchanges -> see .benchmarks/shuffle_audit_r9.json;
     operator docstring has the mechanism)."""
     docs = load_table(spark, sf_dir, "documents")
     split = (

@@ -1080,8 +1080,8 @@ def q_ann_ivf_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/clustering.py::ivf_fixedpoint_assign) over the
     fit-time standing mean. In-distribution the ratio sits ~1 and
     ``stale`` is false; past the MEASURED threshold
-    (IVF_DRIFT_STALE_RATIO, tools/ivf_drift_campaign.py, recall-loss
-    calibrated) ``ivf_absorb_or_refit`` switches from the cheap
+    (IVF_DRIFT_STALE_RATIO, .benchmarks/ivf_drift_threshold.json,
+    recall-loss calibrated) ``ivf_absorb_or_refit`` switches from the cheap
     append to a one-time refit under a new fit tag -- decay is shown,
     trigger fires, recall recovers in tests/test_ivf_drift.py.
 

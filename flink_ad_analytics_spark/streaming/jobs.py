@@ -448,8 +448,8 @@ def streaming_ingest_neardup(
     # ``shuffle_docs`` stays opt-in: the pre-hash repartition moves
     # full document text and makes WITHIN-batch keep-first ties
     # partition-order-dependent (cross-batch semantics unaffected --
-    # bucket state decides). Cost shape (bench_streaming.py /
-    # .benchmarks/neardup_gate_r5.json): hashing is cheap (26k docs
+    # bucket state decides). Cost shape
+    # (.benchmarks/neardup_gate_r5.json): hashing is cheap (26k docs
     # sign in ~3s batch-side); per-trigger cost is the micro-batch
     # incremental-execution floor, so throughput scales with batch
     # size -- the standard latency/throughput dial. MEASURED at four
@@ -640,8 +640,8 @@ def streaming_semantic_decontamination(
 #: the click leg alone runs three). Measured on the sf0.1 replay
 #: (.benchmarks/family_maintenance_sf0.1.json store dial): 1-file +
 #: 16-partition default 1,041 ev/s; 4 files/trigger 3,554; 4 state
-#: partitions 2,803; tools/family_maintenance_bench.py's headline run
-#: now applies this preset and records the single-lever points as the
+#: partitions 2,803; that file's headline run
+#: applies this preset and records the single-lever points as the
 #: dial. At 100 TB the same principle holds with different numbers:
 #: trigger size amortizes the commit clock, state partitions scale
 #: with keys actually in the watermark horizon, not with data read.
@@ -697,7 +697,7 @@ def streaming_family_rollups(
     row (the reconciliation recipe is tested in
     tests/test_streaming_family_rollup.py::test_late_data_*). The
     default is a deliberately conservative 10 minutes for production
-    wiring; replay harnesses (tests, tools/family_maintenance_bench)
+    wiring; replay harnesses (tests, the family_maintenance_sf0.1.json replay)
     pass an explicit tight bound because their buses deliver in
     order. NOTE (reference divergence, ADVICE r9): the reference job
     declares `WATERMARK ... INTERVAL '5' SECOND`
@@ -949,7 +949,7 @@ def streaming_ivf_absorb(
     is the batch's mean assignment residual over the fit-time mean
     (operators/clustering.py::ivf_drift_stats semantics);
     ``refit_requested`` goes true past the measured
-    IVF_DRIFT_STALE_RATIO (tools/ivf_drift_campaign.py) -- the signal
+    IVF_DRIFT_STALE_RATIO (.benchmarks/ivf_drift_threshold.json) -- the signal
     a downstream batch refitter consumes to re-fit centroids on
     standing+fresh and rebuild the lists once under a new fit tag.
     The rows are per-batch PARTIALS (integer sums), so any window of

@@ -9,9 +9,13 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
+    # A per-run warehouse: fitstore fits left in a cwd spark-warehouse/
+    # by an earlier run would otherwise be served instead of refitted.
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
     spark = build_session(app_name="fas-tests", cpus=8, shuffle_partitions=8,
-                          extra_conf={"spark.ui.enabled": "false"})
+                          extra_conf={"spark.ui.enabled": "false",
+                                      "spark.sql.warehouse.dir": warehouse})
     yield spark
     spark.stop()
 

@@ -5,10 +5,12 @@ half-written directories."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+# the tree this test file sits in, not an installed or other copy
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_ad_analytics_spark.fixtures import generate
 from flink_ad_analytics_spark.operators.anomaly import detect_anomalies

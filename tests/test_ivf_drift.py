@@ -6,8 +6,7 @@ shard and assert the full loop: the ratio rises, recall measurably
 decays, the trigger fires, and the refit branch recovers recall --
 plus the ledger algebra (per-batch partials re-aggregate exactly) and
 the absorb branch staying intact for in-distribution shards.
-Threshold provenance: tools/ivf_drift_campaign.py ->
-.benchmarks/ivf_drift_threshold.json (pin 1.85 between ratio 1.34 =
+Threshold provenance: .benchmarks/ivf_drift_threshold.json (pin 1.85 between ratio 1.34 =
 no decay and 2.37 = first material decay at sf0.1/400 queries).
 """
 
@@ -29,20 +28,6 @@ from flink_ad_analytics_spark.sources.batch import load_table
 SF = "/root/testdata/sf0.01"
 K, ITERS, SEED = 8, 3, 11
 FRESH_BASE = 1_000_000
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from flink_ad_analytics_spark.session import build_session
-
-    s = build_session(
-        app_name="test-ivf-drift",
-        cpus=8,
-        shuffle_partitions=8,
-        extra_conf={"spark.ui.enabled": "false"},
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
 
 
 @pytest.fixture(scope="module")

@@ -4,8 +4,10 @@ advice, unsplittable-row-group detection on the known fixture shape."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the tree this test file sits in, not an installed or other copy
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.partition_advisor import advise, table_stats
 

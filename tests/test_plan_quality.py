@@ -11,6 +11,8 @@ the scan) stays excluded.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from flink_ad_analytics_spark.operators.dedup import minhash_signatures
@@ -507,3 +509,150 @@ def test_market_share_flat_fact_never_exchanged(spark):
     splan = plan_of(shj, "simple")
     assert "ShuffledHashJoin" in splan
     assert "SortMergeJoin" not in splan
+
+
+# --- plan-shape digests --------------------------------------------------
+#
+# One query per engine subsystem: relational core, TPC-H shapes, window
+# functions, dedup family, ANN, text, curation, multimodal, and the
+# band-join/classifier/quality paths. Each digest counts operators in the
+# pre-execution physical plan at sf0.01, so a plan regression (a new
+# shuffle in ctr_hourly, a Python stage in a codegen path) fails here.
+# After an intentional plan change, update the expectation in the same
+# commit. Counts are static upper bounds: AQE can reuse an identical
+# exchange subtree at run time, which the executed-plan gates above
+# check separately.
+
+_PY_NODES = (
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+)
+
+
+def digest(df) -> dict:
+    """Operator counts of ``df``'s physical plan.
+
+    * shuffles -- Exchange nodes other than BroadcastExchange;
+    * broadcasts -- BroadcastExchange nodes;
+    * scans -- FileScan nodes (a re-scan of one table counts twice);
+    * sorts -- Sort nodes;
+    * py_stages -- Python/Arrow evaluation boundaries, the deliberate
+      non-codegen islands;
+    * pushed_filters -- at least one scan carries a non-empty
+      PushedFilters list (matched to end of line, so a filter holding
+      a nested bracket such as ``In(a, [1,2])`` is not cut short).
+
+    Only counts, never operator order: the Expand that plans
+    ``ctr_windows``' two COUNT(DISTINCT)s can list its groups in
+    either order from one planning to the next, and that cannot move
+    any count.
+    """
+    plan = plan_of(df, "simple")
+    return {
+        "shuffles": len(
+            re.findall(r"Exchange (hash|range|single|SinglePartition)", plan, re.I)
+        ),
+        "broadcasts": plan.count("BroadcastExchange"),
+        "scans": plan.count("FileScan"),
+        "sorts": plan.count("Sort ["),
+        "py_stages": sum(plan.count(n) for n in _PY_NODES),
+        "pushed_filters": any(
+            s.strip()
+            for s in re.findall(r"PushedFilters: \[(.*?)\]\s*(?:$|,)", plan, re.M)
+        ),
+    }
+
+
+FLAGSHIP_DIGESTS = {
+    "ctr_hourly": {
+        "shuffles": 3, "broadcasts": 1, "scans": 2,
+        "sorts": 0, "py_stages": 0, "pushed_filters": True,
+    },
+    "anomaly_alerts": {
+        "shuffles": 4, "broadcasts": 1, "scans": 2,
+        "sorts": 1, "py_stages": 0, "pushed_filters": True,
+    },
+    "pricing_summary": {
+        "shuffles": 2, "broadcasts": 0, "scans": 1,
+        "sorts": 0, "py_stages": 0, "pushed_filters": True,
+    },
+    "shipping_priority": {
+        "shuffles": 3, "broadcasts": 2, "scans": 3,
+        "sorts": 0, "py_stages": 0, "pushed_filters": True,
+    },
+    "top_revenue_supplier": {
+        "shuffles": 5, "broadcasts": 2, "scans": 3,
+        "sorts": 0, "py_stages": 0, "pushed_filters": True,
+    },
+    "dedup_exact": {
+        "shuffles": 1, "broadcasts": 0, "scans": 1,
+        "sorts": 0, "py_stages": 0, "pushed_filters": False,
+    },
+    "dedup_minhash_lsh": {
+        "shuffles": 15, "broadcasts": 3, "scans": 6,
+        "sorts": 8, "py_stages": 0, "pushed_filters": True,
+    },
+    "dedup_simhash_pairs": {
+        "shuffles": 3, "broadcasts": 1, "scans": 2,
+        "sorts": 0, "py_stages": 0, "pushed_filters": True,
+    },
+    "ann_cosine_topk": {
+        "shuffles": 4, "broadcasts": 3, "scans": 4,
+        "sorts": 3, "py_stages": 0, "pushed_filters": True,
+    },
+    "text_quality": {
+        "shuffles": 0, "broadcasts": 0, "scans": 1,
+        "sorts": 0, "py_stages": 0, "pushed_filters": False,
+    },
+    "classifier_scores": {
+        "shuffles": 0, "broadcasts": 0, "scans": 1,
+        "sorts": 0, "py_stages": 0, "pushed_filters": False,
+    },
+    "event_bursts": {
+        "shuffles": 3, "broadcasts": 1, "scans": 3,
+        "sorts": 2, "py_stages": 0, "pushed_filters": True,
+    },
+    "semantic_dedup": {
+        "shuffles": 5, "broadcasts": 1, "scans": 0,
+        "sorts": 2, "py_stages": 0, "pushed_filters": False,
+    },
+    "data_quality": {
+        "shuffles": 6, "broadcasts": 1, "scans": 4,
+        "sorts": 0, "py_stages": 0, "pushed_filters": True,
+    },
+    "multimodal_phash": {
+        "shuffles": 2, "broadcasts": 1, "scans": 2,
+        "sorts": 0, "py_stages": 2, "pushed_filters": False,
+    },
+    "quality_weighted_sample": {
+        "shuffles": 0, "broadcasts": 0, "scans": 1,
+        "sorts": 0, "py_stages": 0, "pushed_filters": False,
+    },
+    "curated_corpus": {
+        "shuffles": 16, "broadcasts": 8, "scans": 9,
+        "sorts": 1, "py_stages": 0, "pushed_filters": True,
+    },
+}
+
+
+@pytest.mark.parametrize("name", FLAGSHIP_DIGESTS)
+def test_flagship_plan_digest(spark, name):
+    import __spark_entry__ as entry
+
+    got = digest(entry.queries()[name](spark, SF_CORRECT))
+    assert got == FLAGSHIP_DIGESTS[name], (
+        f"{name}: plan shape changed.\n  now:      {got}\n"
+        f"  expected: {FLAGSHIP_DIGESTS[name]}"
+    )
+
+
+def test_ctr_hourly_digest_stable_across_plannings(spark):
+    """Planning ctr_hourly again under the same conf gives one digest,
+    whichever order the Expand lists its distinct groups in."""
+    import __spark_entry__ as entry
+
+    build = entry.queries()["ctr_hourly"]
+    digests = [digest(build(spark, SF_CORRECT)) for _ in range(3)]
+    assert all(d == digests[0] for d in digests), digests

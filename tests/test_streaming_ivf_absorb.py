@@ -7,7 +7,6 @@ replay double-appends must be harmless under the c_id-grain dedup."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from flink_ad_analytics_spark.operators.clustering import (
@@ -19,20 +18,6 @@ from flink_ad_analytics_spark.sources.batch import load_table
 from flink_ad_analytics_spark.streaming.jobs import streaming_ivf_absorb
 
 SF_CORRECT = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from flink_ad_analytics_spark.session import build_session
-
-    s = build_session(
-        app_name="test-ivf-absorb",
-        cpus=8,
-        shuffle_partitions=8,
-        extra_conf={"spark.ui.enabled": "false"},
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
 
 
 def _rows(df):

@@ -24,20 +24,6 @@ from flink_ad_analytics_spark.streaming.jobs import streaming_profile_index
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from flink_ad_analytics_spark.session import build_session
-
-    s = build_session(
-        app_name="test-profile-index",
-        cpus=8,
-        shuffle_partitions=8,
-        extra_conf={"spark.ui.enabled": "false"},
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-
-
 def _served_vs_exact(spark, idx_df):
     served = {
         r["col_name"]: r
