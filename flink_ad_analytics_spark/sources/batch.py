@@ -97,7 +97,7 @@ def _with_scan_parallelism(spark: SparkSession, df: DataFrame, path: str) -> Dat
     volume warrants (one slot per ~1 MB uncompressed, capped at the session's core
     count), round-robin repartition after the scan. Catalyst still
     pushes filters and column pruning THROUGH the repartition into the
-    scan (verified by tests/test_plan_digests.py's pushdown digests),
+    scan (verified by tests/test_plan_quality.py's pushdown digests),
     so the only cost is one exchange of the pruned columns.
 
     At 100 TB this is a no-op by construction: any real lake layout has

@@ -17,7 +17,6 @@ def test_queries_is_disjoint_union_of_families():
     dupes = sorted({n for n in names if names.count(n) > 1})
     assert not dupes, f"declared in more than one family: {dupes}"
     assert len(entrymod.queries()) == sum(len(f) for f in FAMILIES)
-    assert set(entrymod.queries()) == set(names)
 
 
 def test_every_oracle_names_a_query():
