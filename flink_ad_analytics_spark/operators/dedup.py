@@ -584,10 +584,11 @@ def _signatures_from_shingles(sh: DataFrame, id_col: str) -> DataFrame:
     # Catalyst broadcast MILLIONS of posting rows and OOM the driver.
     # A forced shuffle-hash build of the vocabulary side OOMs too once
     # the vocabulary outgrows per-task memory (hit at 210k docs in
-    # the dedup scale sweep of .benchmarks/scale_curve.json: "not enough memory to build hash map" -- hash
-    # builds cannot spill). Sort-merge spills to disk on both sides,
-    # costs nothing measurable at bench scale, and is the only
-    # strategy that is safe at every corpus size.
+    # the dedup scale sweep of .benchmarks/scale_curve.json: "not
+    # enough memory to build hash map" -- hash builds cannot spill).
+    # Sort-merge spills to disk on both sides, costs nothing
+    # measurable at bench scale, and is the only strategy that is
+    # safe at every corpus size.
     hashed = pinned_posting.join(uniq.hint("merge"), "shingle")
     aggs = [F.min(F.col(f"h_{j}")).alias(f"mh_{j}") for j in range(N_MINHASHES)]
     return hashed.groupBy(id_col).agg(*aggs)
@@ -794,10 +795,10 @@ def simhash_pairs(
     complete-recall scheme.
 
     vs single-block banding (8-bit keys): measured ~8x fewer
-    candidates at 105k docs (.benchmarks/scale_curve.json) -- 10-bit keys collide
-    ~2^10 less per table, with 12 tables instead of 8. Candidate
-    volume is the scale lever: verification cost follows collisions
-    per key, not n^2/2.
+    candidates at 105k docs (.benchmarks/scale_curve.json) -- 10-bit
+    keys collide ~2^10 less per table, with 12 tables instead of 8.
+    Candidate volume is the scale lever: verification cost follows
+    collisions per key, not n^2/2.
 
     NOTE: for ``max_hamming`` > 7 the guarantee lapses; the result is
     then "candidates within max_hamming", which the scale sweep of

@@ -2836,8 +2836,8 @@ def q_table_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches only 0.89s). Measured sf10 steady: 3.41s -> 1.79s, vs
     the exact form's 3.2-3.5s floor -- the approx form now costs
     ~HALF the exact plan ON TOP of its mergeability story, which
-    .benchmarks/table_profile_shard_merge_sf10.json quantifies directly (serve a
-    full-table profile from the standing per-shard sketch index
+    .benchmarks/table_profile_shard_merge_sf10.json quantifies directly
+    (serve a full-table profile from the standing per-shard sketch index
     without any rescan).
 
     No DuckDB oracle: HLL estimates are engine-specific (DataSketches
@@ -2914,11 +2914,12 @@ def q_table_profile_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Steady state this is one aggregate over 16 tiny index rows: no
     corpus scan, no distinct-value exchanges, no Expand -- the cost
-    model .benchmarks/table_profile_shard_merge_sf10.json records at sf10 (serve
-    0.42s vs 3.53s exact recompute, 675 KB index for 15M rows, merged
-    estimates within 1.41% of exact). Ingesting a new shard sketches
-    only the new rows and appends one row (mergeability -- the
-    property exact COUNT(DISTINCT) does not have), and the streaming
+    model .benchmarks/table_profile_shard_merge_sf10.json records at
+    sf10 (serve 0.42s vs 3.53s exact recompute, 675 KB index for 15M
+    rows, merged estimates within 1.41% of exact). Ingesting a new
+    shard sketches only the new rows and appends one row
+    (mergeability -- the property exact COUNT(DISTINCT) does not
+    have), and the streaming
     twin (streaming/jobs.py::streaming_profile_index) maintains the
     same index continuously.
 

@@ -6,8 +6,9 @@ shard and assert the full loop: the ratio rises, recall measurably
 decays, the trigger fires, and the refit branch recovers recall --
 plus the ledger algebra (per-batch partials re-aggregate exactly) and
 the absorb branch staying intact for in-distribution shards.
-Threshold provenance: .benchmarks/ivf_drift_threshold.json (pin 1.85 between ratio 1.34 =
-no decay and 2.37 = first material decay at sf0.1/400 queries).
+Threshold provenance: .benchmarks/ivf_drift_threshold.json (pin 1.85
+between ratio 1.34 = no decay and 2.37 = first material decay at
+sf0.1/400 queries).
 """
 
 from __future__ import annotations
