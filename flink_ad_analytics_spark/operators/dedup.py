@@ -932,6 +932,12 @@ def _star_components_labels(e: DataFrame, max_iter: int) -> DataFrame:
         cur.unpersist()
         cur = nxt
         prev_stats = stats
+    else:
+        cur.unpersist()
+        raise ValueError(
+            f"connected_components(algorithm='star'): no fixpoint after "
+            f"{max_iter} rounds; raise max_iter"
+        )
     # converged: the returned labels are lazy over the final edge set,
     # so a plain return would pin its cache for the session lifetime
     # (the pagerank_fp leak class). Materialize via eager checkpoint,
@@ -941,8 +947,7 @@ def _star_components_labels(e: DataFrame, max_iter: int) -> DataFrame:
     cur = final
     # stars centered at component minima -- every non-center
     # vertex appears as u exactly once with v = its center; centers
-    # appear only as v. min() guards the not-fully-converged case
-    # (max_iter hit) with the best label seen.
+    # appear only as v.
     non_centers = cur.groupBy("u").agg(F.min("v").alias("label"))
     centers = (
         cur.select(F.col("v").alias("u"))
@@ -995,6 +1000,10 @@ def connected_components(
     Output: (``id_col``, cluster_id) for EVERY vertex; singletons are
     their own cluster. ``vertices`` must carry unique ids (the
     documents contract) -- they are not re-deduplicated here.
+
+    Raises ValueError when ``max_iter`` rounds end before the solver
+    has confirmed its fixpoint (min_label confirms with one round
+    after the last label move), rather than return partial labels.
     """
     if algorithm not in ("min_label", "star"):
         raise ValueError(
@@ -1057,6 +1066,13 @@ def connected_components(
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
+        else:
+            labels.unpersist()
+            raise ValueError(
+                f"connected_components(algorithm='min_label'): labels "
+                f"still moving after {max_iter} rounds; raise max_iter "
+                "or use algorithm='star'"
+            )
         # stamp singletons: one broadcast-or-shuffle left join (AQE
         # decides -- the converged label set is usually tiny relative
         # to the corpus) instead of having carried them every round.
@@ -1132,7 +1148,6 @@ def decontaminate(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_contam: bool = True,
 ) -> DataFrame:
     """Drop training docs sharing any n-word-gram with a held-out set.
 
@@ -1147,8 +1162,7 @@ def decontaminate(
     bogus, so Catalyst cannot be trusted to choose). The 100 TB side
     then never shuffles: grams stream through the broadcast hash
     semi-join and contaminated ids aggregate (a shuffle on ids, tiny).
-    Benchmarks are small by nature; if contam is NOT small, pass
-    broadcast_contam=False to fall back to sort-merge.
+    Benchmarks are small by nature.
 
     The final anti-join's strategy is deliberately left to AQE: the
     dirty-id list is usually broadcast-tiny, but it is unbounded in
@@ -1158,141 +1172,8 @@ def decontaminate(
     """
     doc_grams = ngram_set(docs, n, id_col, text_col)
     contam_grams = ngram_set(contam, n, id_col, text_col).select("gram").distinct()
-    if broadcast_contam:
-        contam_grams = F.broadcast(contam_grams)
-    else:
-        contam_grams = contam_grams.hint("merge")
     dirty = (
-        doc_grams.join(contam_grams, "gram", "left_semi")
-        .select(id_col)
-        .distinct()
-    )
-    return docs.join(dirty, id_col, "left_anti")
-
-
-def bloom_build(
-    keys: DataFrame,
-    key_col: str,
-    *,
-    m_bits: int = 1 << 20,
-    k: int = 5,
-) -> DataFrame:
-    """Distributed Bloom-filter BUILD as a pure-SQL bit-array
-    aggregate: (word_idx, word) rows, word = OR of the 64-bit chunks
-    of all set positions. No driver collect, no UDF -- the filter is
-    itself a (tiny) DataFrame, built with one shuffle on word_idx and
-    meant to be broadcast at probe time.
-
-    Position j for key x is ``pmod(xxhash64(x, j), m_bits)`` -- k
-    independent hashes via the seed-as-extra-hash-input idiom (Spark's
-    xxhash64 takes no seed parameter but hashes tuples).
-
-    Size it like any Bloom filter: m_bits ~ 10 bits/key gives ~1% FP
-    at k=5; the output is at most m_bits/64 rows of 16 bytes (2 MB of
-    longs for a 1-billion-key filter at 10 bits/key would be 1.25 GB
-    -- past broadcast comfort, so for benchmark-decontamination use
-    the BENCHMARK side, which is small by nature, as the build side).
-    """
-    pos = [
-        F.pmod(F.xxhash64(F.col(key_col), F.lit(j)), F.lit(m_bits))
-        for j in range(k)
-    ]
-    chunks = keys.select(
-        F.explode(F.array(*pos)).alias("pos")
-    ).select(
-        (F.col("pos") / 64).cast("long").alias("word_idx"),
-        F.call_function("shiftleft", F.lit(1).cast("long"), F.pmod(F.col("pos"), F.lit(64)).cast("int")).alias("mask"),
-    )
-    return chunks.groupBy("word_idx").agg(F.bit_or("mask").alias("word"))
-
-
-def bloom_probe(
-    probe: DataFrame,
-    bloom: DataFrame,
-    key_col: str,
-    *,
-    m_bits: int = 1 << 20,
-    k: int = 5,
-) -> DataFrame:
-    """Bloom-filter PROBE with ZERO shuffle on the probe side: k
-    chained broadcast hash joins, one per hash function, each followed
-    by a bit-test filter that prunes progressively (most true
-    negatives die at the first probe, so joins 2..k see a shrinking
-    stream). No k-times row explosion, no re-grouping -- the classic
-    explode-k-rows-then-bool_and formulation costs a shuffle of k x
-    |probe|, which at 100 TB is the whole game.
-
-    Returns the bloom-POSITIVE subset of ``probe`` (definitely-present
-    plus ~fpp false positives; never drops a true member). A missing
-    word_idx joins to NULL and the bit test is NULL -> filtered: an
-    all-zero word correctly rejects.
-    """
-    # ONE materialization of the (tiny) bit array feeds all k probe
-    # joins: the per-j renamed projections (needed to avoid ambiguous
-    # self-join references) defeat ReuseExchange, so without the
-    # checkpoint each BroadcastExchange re-ran the whole build --
-    # measured 5x the build cost in the plan audit. localCheckpoint
-    # truncates the lineage; the k broadcasts then each read the
-    # already-materialized bit array.
-    bloom = bloom.localCheckpoint(eager=False)
-    out = probe
-    for j in range(k):
-        pos = F.pmod(F.xxhash64(F.col(key_col), F.lit(j)), F.lit(m_bits))
-        widx = (pos / 64).cast("long")
-        mask = F.call_function(
-            "shiftleft", F.lit(1).cast("long"), F.pmod(pos, F.lit(64)).cast("int")
-        )
-        bj = bloom.select(
-            F.col("word_idx").alias(f"_bw_idx_{j}"),
-            F.col("word").alias(f"_bw_{j}"),
-        )
-        out = (
-            out.withColumn(f"_widx_{j}", widx)
-            .withColumn(f"_mask_{j}", mask)
-            .join(F.broadcast(bj), F.col(f"_widx_{j}") == F.col(f"_bw_idx_{j}"), "left")
-            .filter(
-                F.col(f"_bw_{j}").bitwiseAND(F.col(f"_mask_{j}"))
-                == F.col(f"_mask_{j}")
-            )
-            .drop(f"_widx_{j}", f"_mask_{j}", f"_bw_idx_{j}", f"_bw_{j}")
-        )
-    return out
-
-
-def decontaminate_bloom(
-    docs: DataFrame,
-    contam: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    m_bits: int = 1 << 20,
-    k: int = 5,
-) -> DataFrame:
-    """`decontaminate` with a Bloom prefilter -- the scale path when
-    the benchmark gram set is too large to broadcast as an exact hash
-    relation (many benchmarks x long grams), yet its BLOOM digest
-    (10 bits/gram) still is.
-
-    Three stages, exact final answer (identical to `decontaminate` --
-    the bloom admits false positives only, and every survivor is
-    exact-verified):
-
-    1. build: benchmark grams -> (word_idx, word) bit-array aggregate
-       (one small shuffle on the benchmark side);
-    2. prefilter: training grams stream through k broadcast bit-test
-       joins -- zero shuffle, ~(1-fpp) of clean grams eliminated
-       without ever touching the exact gram set;
-    3. verify: only bloom-positive grams semi-join the exact benchmark
-       gram set, so the expensive exact join's left side is the tiny
-       contaminated+fpp stream, not the whole corpus. At this size the
-       exact set may stay a shuffle join without pain.
-    """
-    doc_grams = ngram_set(docs, n, id_col, text_col)
-    contam_grams = ngram_set(contam, n, id_col, text_col).select("gram").distinct()
-    bloom = bloom_build(contam_grams, "gram", m_bits=m_bits, k=k)
-    candidates = bloom_probe(doc_grams, bloom, "gram", m_bits=m_bits, k=k)
-    dirty = (
-        candidates.join(F.broadcast(contam_grams), "gram", "left_semi")
+        doc_grams.join(F.broadcast(contam_grams), "gram", "left_semi")
         .select(id_col)
         .distinct()
     )

@@ -393,6 +393,19 @@ PCM_SILENCE_AMP = 20_000
 PCM_HOT_AMP = 28_000
 
 
+PCM_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("asset_id", T.LongType(), False),
+        T.StructField("n_samples", T.LongType(), False),
+        T.StructField("n_frames", T.LongType(), False),
+        T.StructField("total_energy", T.LongType(), False),
+        T.StructField("peak", T.LongType(), False),
+        T.StructField("silence_frames", T.LongType(), False),
+        T.StructField("hot_samples", T.LongType(), False),
+    ]
+)
+
+
 def pcm_frame_stats(
     assets: DataFrame,
     *,
@@ -407,122 +420,18 @@ def pcm_frame_stats(
     ``frame_samples``-sample frames (trailing partial frame dropped),
     and aggregate exact-integer energy/peak/silence/hot-sample stats.
 
-    Implementation is PURE SQL on both engines -- the payload's hex
-    string is exploded into per-sample byte pairs, signed-decoded with
-    integer arithmetic, and framed with a groupBy -- so every output
-    is an exact integer, bit-identical cross-engine (no floats
-    anywhere; RMS comparisons are stated as energy < n * amp^2).
-    The explode is the scale cost: one row per sample, linear in
-    audio seconds, combine-heavy aggregation right behind it --
-    the same shape as char_stats' codepoint explode, which measured
-    FASTER than interpreted higher-order-function folds.
+    One zero-shuffle Arrow pass (``mapInPandas`` +
+    ``numpy.frombuffer('<i2')``): each payload stays one Arrow cell,
+    is decoded as a single vectorized view (no copy) and yields one
+    result row per asset, with int64 accumulation throughout -- every
+    output is an exact integer, so the DuckDB oracle (a per-sample
+    hex-explode SQL plan) matches it value for value. RMS comparisons
+    are stated as energy < n * amp^2, so no float is involved.
 
     Output per asset: n_samples, n_frames, total_energy, peak
     (max |sample|), silence_frames (energy below the RMS floor), and
-    hot_samples (|sample| >= hot_amp) over full frames.
-    """
-    w = frame_samples
-    h = assets.select(
-        "asset_id",
-        F.hex(F.col("payload")).alias("h"),
-        (F.octet_length("payload") / 2).cast("long").alias("n_samples"),
-    )
-    # Assets without a single full frame contribute nothing downstream
-    # (the n == w filter drops them) -- prune BEFORE the explode so
-    # short payloads never fan out, and so Spark's sequence(0, -1)
-    # descending-step surprise (a 0-sample payload would otherwise
-    # yield i = [0, -1]) can't occur.
-    h = h.filter(F.col("n_samples") >= w)
-    per_sample = h.select(
-        "asset_id",
-        "n_samples",
-        F.explode(F.expr("sequence(0, CAST(n_samples AS INT) - 1)")).alias(
-            "i"
-        ),
-        F.col("h"),
-    ).select(
-        "asset_id",
-        "n_samples",
-        (F.col("i") / w).cast("long").alias("frame"),
-        # r12: one base-16 conv per sample instead of two. s16le means
-        # byte i is the LOW byte and byte i+1 the HIGH byte; swapping
-        # the two hex pairs before a single conv yields the identical
-        # unsigned sample (hi*256 + lo). Measured min-of-3 x2 sessions:
-        # 2.93 -> 2.67s at sf0.1, value-identical.
-        F.conv(
-            F.expr(
-                "concat(substring(h, 4 * i + 3, 2), "
-                "substring(h, 4 * i + 1, 2))"
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("u"),
-    )
-    signed = per_sample.withColumn(
-        "s",
-        F.when(F.col("u") >= 32768, F.col("u") - 65536).otherwise(F.col("u")),
-    )
-    frames = (
-        signed.groupBy("asset_id", "n_samples", "frame")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("s") * F.col("s")).alias("energy"),
-            F.max(F.abs("s")).alias("peak"),
-            F.sum((F.abs("s") >= hot_amp).cast("long")).alias("hot"),
-        )
-        .filter(F.col("n") == w)  # trailing partial frame dropped
-    )
-    return frames.groupBy("asset_id").agg(
-        F.max("n_samples").alias("n_samples"),
-        F.count(F.lit(1)).alias("n_frames"),
-        F.sum("energy").alias("total_energy"),
-        F.max("peak").alias("peak"),
-        F.sum(
-            (F.col("energy") < F.lit(w) * F.lit(silence_amp) ** 2).cast(
-                "long"
-            )
-        ).alias("silence_frames"),
-        F.sum("hot").alias("hot_samples"),
-    )
-
-
-PCM_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("n_samples", T.LongType(), False),
-        T.StructField("n_frames", T.LongType(), False),
-        T.StructField("total_energy", T.LongType(), False),
-        T.StructField("peak", T.LongType(), False),
-        T.StructField("silence_frames", T.LongType(), False),
-        T.StructField("hot_samples", T.LongType(), False),
-    ]
-)
-
-
-def pcm_frame_stats_arrow(
-    assets: DataFrame,
-    *,
-    frame_samples: int = 32,
-    silence_amp: int = PCM_SILENCE_AMP,
-    hot_amp: int = PCM_HOT_AMP,
-) -> DataFrame:
-    """Production twin of :func:`pcm_frame_stats`: one zero-shuffle
-    Arrow pass (``mapInPandas`` + ``numpy.frombuffer('<i2')``) instead
-    of the hex-explode SQL plan. Numerically identical by
-    construction -- all int64 accumulation, no floats -- and proven
-    equal by ``test_pcm_arrow_equals_sql``.
-
-    Scale rationale: the SQL form fans each payload out to one row per
-    sample (a 2-byte sample becomes a ~50-byte row plus two string
-    ``conv`` calls), so the explode inflates 100 TB of audio to
-    multi-PB of intermediate rows before the combine. This pass keeps
-    each payload as one Arrow cell, decodes it in a single vectorized
-    ``frombuffer`` view (no copy), and emits one result row per asset
-    with NO shuffle at all -- per-partition work, linear in bytes,
-    the same shape as the image decode path. Prefer it everywhere; the
-    SQL form exists as the cross-engine-exact oracle anchor.
+    hot_samples (|sample| >= hot_amp) over full frames. An asset with
+    a NULL payload or without one full frame yields no row.
     """
     w = frame_samples
     floor = w * silence_amp * silence_amp
@@ -533,6 +442,8 @@ def pcm_frame_stats_arrow(
         for pdf in batches:
             out = []
             for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
+                if payload is None:
+                    continue
                 buf = bytes(payload)
                 s = np.frombuffer(buf, dtype="<i2", count=len(buf) // 2)
                 n_full = len(s) // w

@@ -19,11 +19,15 @@ streaming/jobs.py::streaming_profile_index appends one index row per
 micro-batch via foreachBatch -- the same batch/streaming duality
 contract as the events-family rollups.
 
-The typed sketch inputs match q_table_profile_approx exactly
-(queries.py::_sketch_input): longs feed directly, 2dp money as exact
-cents, timestamps as unix_micros -- order-preserving, so the SAME
-typed value serves both the sketch and min/max, rendered to the
-canonical string only at serve time.
+Sketch inputs are typed (``_typed_input``): longs feed directly, 2dp
+money as exact cents, timestamps as unix_micros -- injective and
+order-preserving, so the SAME typed value serves both the sketch and
+min/max, rendered to the canonical string only at serve time (per-row
+string formatting, not the sketches, was the cost of profiling a
+scan). ``hll_sketch_agg`` keeps each sketch in one BinaryType buffer
+column; Spark's ``approx_count_distinct`` at rsd=0.01 splices ~2,040
+long attributes per column into the aggregation buffer, which made
+planning and codegen of a six-column profile several times slower.
 """
 
 from __future__ import annotations
@@ -31,8 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 #: lgConfigK for every profile sketch -- must be uniform across index
-#: rows so hll_union_agg merges losslessly (same as
-#: q_table_profile_approx).
+#: rows so hll_union_agg merges losslessly.
 PROFILE_LG_K = 14
 
 
@@ -94,9 +97,8 @@ def build_profile_index(
 def profile_from_index(idx: DataFrame, cols: tuple) -> DataFrame:
     """Serve the full-table profile from index rows alone: merge the
     sketches (union), sum the counts, fold min/max. Output schema
-    matches q_table_profile / q_table_profile_approx (col_name,
-    n_nulls, n_distinct, min_repr, max_repr + n_rows), with
-    n_distinct the merged HLL estimate."""
+    matches q_table_profile (col_name, n_nulls, n_distinct, min_repr,
+    max_repr + n_rows), with n_distinct the merged HLL estimate."""
     from ..queries import _profile_repr_spark
 
     def _render(c: F.Column, kind: str) -> F.Column:

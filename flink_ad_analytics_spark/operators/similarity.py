@@ -634,7 +634,7 @@ def semantic_decontaminate(
     """SEMANTIC decontamination: flag training vectors whose exact
     integer-lattice dot product with ANY eval-set vector reaches
     ``threshold`` -- the embedding-similarity complement of the n-gram
-    decontamination family (operators/dedup.py decontaminate/bloom):
+    decontamination (operators/dedup.py::decontaminate):
     n-grams catch verbatim leakage, this catches paraphrase-level
     leakage the way SemDeDup-style pipelines do before training.
 

@@ -1006,7 +1006,8 @@ def q_order_value_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFr
     Why it exists: exact percentile buffers and sorts every group
     value; the GK sketch is a bounded-memory mergeable summary, so the
     aggregate stays a normal partial/final pass at any row count --
-    the same swap table_profile_approx makes for distinct counts.
+    the same swap the standing profile index (operators/profile.py)
+    makes for distinct counts.
 
     No DuckDB oracle: approx quantile sketches are engine-specific
     (Spark GK vs DuckDB t-digest). The accuracy contract is tested
@@ -2730,9 +2731,9 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges ARE the floor -- no exact shape beats ~3.5x the 0.71s
     same-host oracle, and the route-(a) alternatives are now all
     measured (adjudication artifact). This exact form is the
-    ORACLE-ANCHOR; the 100 TB serving path is table_profile_approx
-    (one scan, per-column mergeable DataSketches HLL, zero rescans,
-    persistable as a standing profile index).
+    ORACLE-ANCHOR; the 100 TB serving path is table_profile_served
+    (a standing profile index of per-shard mergeable DataSketches HLL
+    sketches, built in one scan and persisted by the fit store).
     """
     o = load_table(spark, sf_dir, "orders")
     wide = o.agg(
@@ -2791,114 +2792,6 @@ ORDER BY col_name
 """
 
 
-def q_table_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """100 TB variant of q_table_profile: HyperLogLog++ approximate
-    distinct counts (rsd=0.01) instead of exact COUNT(DISTINCT).
-
-    Why it exists: exact distinct counts cost either an Expand
-    (|cols|+1x row replication, Spark's multi-countDistinct compile)
-    or one extra column-pruned scan + distinct-value exchange per
-    column (q_table_profile's strategy). approx_count_distinct is an
-    ordinary partial aggregate, so EVERY stat rides a single scan:
-    scan -> partial agg -> 1-row final agg, per-column HLL sketches in
-    ~constant memory, zero rescans and zero row replication. At
-    100 TB this is the profile you actually run.
-
-    Sketch choice (measured at sf3, 4.5M orders): Spark's classic
-    ``approx_count_distinct`` (HLL++) at rsd=0.01 compiles its
-    aggregation buffer as ~2,040 LongType attributes PER COLUMN
-    (m/6 words spliced into the buffer schema), so six columns put
-    ~12K attributes through planning/codegen -- 12.0s first-run /
-    4.3s steady. ``hll_sketch_agg`` (Apache DataSketches HLL,
-    lgConfigK=14) keeps the whole sketch in ONE BinaryType buffer
-    column: 4.3s first-run / 1.1s steady, and max observed relative
-    error 1.1% (theoretical RSE ~0.8%) -- strictly better on both
-    axes, plus the binary sketches are mergeable/persistable as a
-    standing profile index at 100 TB.
-
-    Sketch INPUTS are typed, not stringified (round 9): longs feed
-    directly, 2dp money feeds as exact cents (injective on the
-    fixed-point contract tests/test_testdata_contract.py pins),
-    timestamps as unix_micros (injective); only real string columns
-    pay string hashing. Measured sf10 same-session steady 3.71s
-    (all-string) -> 3.32s, and at 100 TB the avoided per-row string
-    allocation is the difference between a compute-bound and an
-    allocation-bound scan. Estimates change vs the all-string sketch
-    (different hash inputs) but stay inside the same HLL error bar --
-    the 2% accuracy gate re-proves it.
-
-    Round 10 (VERDICT r9 item 4 -- "approx barely beats exact"):
-    min/max now aggregate over the SAME typed longs the sketch hashes
-    (order-preserving cents / unix_micros) and render the canonical
-    string after aggregation, removing the per-row repr formatting
-    that round-10 profiling showed was the real cost (the wide
-    nulls+min/max-over-repr agg alone was 2.64s at sf10; the six HLL
-    sketches only 0.89s). Measured sf10 steady: 3.41s -> 1.79s, vs
-    the exact form's 3.2-3.5s floor -- the approx form now costs
-    ~HALF the exact plan ON TOP of its mergeability story, which
-    .benchmarks/table_profile_shard_merge_sf10.json quantifies directly
-    (serve a full-table profile from the standing per-shard sketch index
-    without any rescan).
-
-    No DuckDB oracle: HLL estimates are engine-specific (DataSketches
-    vs DuckDB's sketch), so cross-engine value equality is undefined.
-    The accuracy contract is tested instead: every n_distinct within
-    2% of q_table_profile's exact value, and nulls/min/max/n_rows
-    byte-identical to the exact entry
-    (tests/test_oracle_parity.py::test_table_profile_approx_accuracy).
-    """
-    def _sketch_input(col: str, kind: str) -> F.Column:
-        if kind == "int":
-            return F.col(col)
-        if kind == "num":
-            return _cents(col).cast("long")
-        if kind == "ts":
-            return F.unix_micros(F.col(col).cast("timestamp"))
-        return F.col(col).cast("string")
-
-    def _render_typed(c: F.Column, kind: str) -> F.Column:
-        # inverse of _sketch_input back to the canonical repr: cents
-        # -> %.2f (exact: IEEE division of an integer-valued double by
-        # 100 is correctly rounded, %.2f re-rounds to the same 2dp),
-        # unix_micros -> formatted timestamp
-        if kind == "num":
-            return F.format_string("%.2f", c.cast("double") / 100)
-        if kind == "ts":
-            return F.date_format(
-                F.timestamp_micros(c), "yyyy-MM-dd HH:mm:ss"
-            )
-        return _profile_repr_spark(c, kind)
-
-    o = load_table(spark, sf_dir, "orders")
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for col, kind in _PROFILE_COLS:
-        # min/max ride the SAME typed long/string the sketch hashes
-        # (order-preserving by construction), rendered to the
-        # canonical string AFTER aggregation -- round 10: the per-row
-        # repr formatting was 2.5s of the 3.4s sf10 scan
-        x = _sketch_input(col, kind)
-        aggs += [
-            F.sum(F.col(col).isNull().cast("long")).alias(f"{col}__nulls"),
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(x, F.lit(14))
-            ).alias(f"{col}__distinct"),
-            _render_typed(F.min(x), kind).alias(f"{col}__min"),
-            _render_typed(F.max(x), kind).alias(f"{col}__max"),
-        ]
-    wide = o.agg(*aggs)
-    stack = ", ".join(
-        f"'{col}', {col}__nulls, {col}__distinct, {col}__min, {col}__max"
-        for col, _ in _PROFILE_COLS
-    )
-    return wide.select(
-        "n_rows",
-        F.expr(
-            f"stack({len(_PROFILE_COLS)}, {stack}) AS "
-            "(col_name, n_nulls, n_distinct, min_repr, max_repr)"
-        ),
-    ).orderBy("col_name")
-
-
 #: hash-shard count for the standing profile index served by
 #: q_table_profile_served (the n_shards of
 #: .benchmarks/table_profile_shard_merge_sf10.json)
@@ -2928,8 +2821,8 @@ def q_table_profile_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus re-builds and a warm warehouse serves without re-sketching
     -- identical to the ANN/PQ/k-means fit/serve contract.
 
-    No DuckDB oracle (rows-only driver row, like table_profile_approx:
-    DataSketches HLL estimates are engine-specific). The accuracy
+    No DuckDB oracle (rows-only driver row: DataSketches HLL
+    estimates are engine-specific). The accuracy
     contract is tested instead: nulls/min/max/n_rows BYTE-EQUAL to the
     exact profile and every n_distinct within the same 2% gate
     (tests/test_oracle_parity.py::test_table_profile_served_accuracy).
@@ -4102,7 +3995,6 @@ RELATIONAL_QUERIES: dict[str, tuple] = {
     "table_profile": (q_table_profile, TABLE_PROFILE_SQL),
     # rows-only: HLL estimates are engine-specific; accuracy vs the
     # exact profile is value-gated in test_oracle_parity instead
-    "table_profile_approx": (q_table_profile_approx, None),
     # rows-only for the same reason; serves from the standing
     # per-shard sketch index (fit-store build-or-reuse), accuracy
     # value-gated vs the exact profile in test_oracle_parity

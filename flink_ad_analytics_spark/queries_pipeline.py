@@ -23,7 +23,6 @@ from .operators.clustering import (
 from .operators.clustering import pq_codes_stats, semantic_dedup
 from .operators.dedup import (
     decontaminate,
-    decontaminate_bloom,
     ngram_set,
     span_dedup,
 )
@@ -519,25 +518,6 @@ def q_decontaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_bench = F.expr(_bench_pred("STRING"))
     bench, cand = docs.filter(is_bench), docs.filter(~is_bench)
     clean = decontaminate(cand, bench, n=_CONTAM_N)
-    return clean.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_clean"),
-        F.sum("doc_id").alias("sum_ids"),
-        F.sum("n_chars").alias("sum_chars"),
-    )
-
-
-def q_decontaminated_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same audit as q_decontaminated through the Bloom-prefilter
-    engine path (operators/dedup.py:decontaminate_bloom): benchmark
-    grams -> distributed bit-array -> k zero-shuffle broadcast
-    bit-test joins -> exact verify. The final answer is EXACTLY the
-    broadcast-semi-join path's (the bloom only ever admits false
-    positives, which the verify stage kills), so the oracle is
-    literally DECONTAMINATED_SQL."""
-    docs = load_table(spark, sf_dir, "documents")
-    is_bench = F.expr(_bench_pred("STRING"))
-    bench, cand = docs.filter(is_bench), docs.filter(~is_bench)
-    clean = decontaminate_bloom(cand, bench, n=_CONTAM_N, m_bits=1 << 16, k=5)
     return clean.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_clean"),
         F.sum("doc_id").alias("sum_ids"),
@@ -3116,9 +3096,9 @@ def q_pcm_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     opaque payload as raw s16le PCM and compute frame-level
     energy/peak/silence/clipping stats (operators/multimodal.py::
     pcm_frame_stats). Raw-PCM decode is pure byte arithmetic, so
-    unlike the image/video legs it needs NO media library -- the whole
-    pipeline is codegen SQL on both engines and every output is an
-    exact integer."""
+    unlike the image/video legs it needs NO media library, and every
+    output is an exact integer: the Spark side is one Arrow/numpy
+    pass, the DuckDB oracle a per-sample SQL explode."""
     from .operators.multimodal import assets_from_documents, pcm_frame_stats
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3278,17 +3258,6 @@ SELECT lang,
 FROM documents
 GROUP BY lang
 """
-
-
-def q_pcm_frame_stats_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production form of ``pcm_frame_stats``: one zero-shuffle Arrow
-    pass (numpy s16le view, int64 accumulation) instead of the
-    per-sample hex explode. Output is bit-identical to the SQL form,
-    so it value-gates against the SAME oracle."""
-    from .operators.multimodal import assets_from_documents, pcm_frame_stats_arrow
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pcm_frame_stats_arrow(assets_from_documents(docs))
 
 
 PCM_FRAME_STATS_SQL = """
@@ -3932,7 +3901,6 @@ PIPELINE_QUERIES: dict[str, tuple] = {
     "data_quality": (q_data_quality, DATA_QUALITY_SQL),
     "multimodal_phash": (q_multimodal_phash, MULTIMODAL_PHASH_SQL),
     "pcm_frame_stats": (q_pcm_frame_stats, PCM_FRAME_STATS_SQL),
-    "pcm_frame_stats_arrow": (q_pcm_frame_stats_arrow, PCM_FRAME_STATS_SQL),
     "orc_corpus_stats": (q_orc_corpus_stats, ORC_CORPUS_STATS_SQL),
     "kcenter_coreset": (q_kcenter_coreset, KCENTER_CORESET_SQL),
     "kcenter_coverage": (q_kcenter_coverage, KCENTER_COVERAGE_SQL),
@@ -3993,7 +3961,6 @@ PIPELINE_QUERIES: dict[str, tuple] = {
         q_semantic_decontamination,
         SEMANTIC_DECONTAMINATION_SQL,
     ),
-    "decontaminated_bloom": (q_decontaminated_bloom, DECONTAMINATED_SQL),
     "pii_redaction": (q_pii_redaction, PII_REDACTION_SQL),
     "embedding_quantization": (q_embedding_quantization, EMBEDDING_QUANTIZATION_SQL),
     "ann_quantized_topk": (q_ann_quantized_topk, ANN_QUANTIZED_TOPK_SQL),

@@ -73,9 +73,8 @@ ENGINE_BUILD_CONF = {
     "spark.sql.files.openCostInBytes": "1048576",
     # r12 (guide sections 2.2/9): let AQE coalesce post-shuffle
     # partitions toward the advisory byte size instead of padding
-    # them out to default parallelism; env-overridable for cluster
-    # profiles where 128-256m partitions amortize better
-    # (SPARK_GRAFT_ADVISORY_PARTITION_BYTES).
+    # them out to default parallelism; cluster profiles where 128-256m
+    # partitions amortize better override it through extra_conf.
     #
     # r13 (verdict item 1): the r12 change shipped withOUT a
     # parallelism floor, and byte-based coalescing serialized every
@@ -95,9 +94,7 @@ ENGINE_BUILD_CONF = {
     # below one task per core. Set in build_session (needs the core
     # count); parallelismFirst stays false so the intent is explicit.
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
-        "SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"
-    ),
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     # Session windows / stateful ops off-heap state can stay default
     # locally; RocksDB provider is configured by streaming jobs that
     # need large state (see streaming/jobs.py).
@@ -168,9 +165,9 @@ def build_session(
     """Create (or get) a SparkSession with engine defaults.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores; shuffle
-    partitions default to max(32, 2*cpus) -- at cluster scale this is
-    instead sized so a shuffle partition is ~128-200 MB, with AQE
-    coalescing handling the long tail.
+    partitions default to 32 (ENGINE_BUILD_CONF) -- at cluster scale
+    this is instead sized so a shuffle partition is ~128-200 MB, with
+    AQE coalescing handling the long tail.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
@@ -179,10 +176,9 @@ def build_session(
     conf = dict(ENGINE_BUILD_CONF)
     # AQE coalescing floor = the session's parallelism (see the
     # ENGINE_BUILD_CONF comment; on a cluster this is the submit
-    # config's total core count). Env-overridable like the advisory.
-    conf["spark.sql.adaptive.coalescePartitions.minPartitionNum"] = (
-        os.environ.get("SPARK_GRAFT_COALESCE_MIN_PARTITIONS")
-        or str(cpus or os.cpu_count() or 1)
+    # config's total core count). extra_conf overrides it.
+    conf["spark.sql.adaptive.coalescePartitions.minPartitionNum"] = str(
+        cpus or os.cpu_count() or 1
     )
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

@@ -312,7 +312,7 @@ def streaming_hourly_reach(
     though both carry the usual estimation error vs the true count.
 
     Measured caveat that picked this sketch: DataSketches
-    ``hll_sketch_agg`` (the batch table_profile_approx choice, 4x
+    ``hll_sketch_agg`` (the standing profile index's choice, 4x
     cheaper to PLAN at rsd=0.01-class accuracy) is NOT merge-path
     stable -- unioning micro-batch partials walks a different
     sparse->dense promotion than one-shot aggregation and shifts the
@@ -798,7 +798,7 @@ def streaming_profile_index(
 
     Exactness contract: every mergeable stat is exact except
     n_distinct, which carries the HLL error bar of the batch
-    ``q_table_profile_approx`` (same lgConfigK, same typed inputs);
+    ``build_profile_index`` (same lgConfigK, same typed inputs);
     n_rows / nulls / min / max served from the index are byte-equal
     to the batch profile because sums and min/max folds are exact
     over any partition of the rows -- asserted against

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from flink_ad_analytics_spark.session import build_session
@@ -12,10 +14,18 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark(tmp_path_factory):
     # A per-run warehouse: fitstore fits left in a cwd spark-warehouse/
     # by an earlier run would otherwise be served instead of refitted.
+    # A per-run local dir for shuffle and spill files too (Spark lets
+    # $SPARK_LOCAL_DIRS, when set, take precedence over it).
     warehouse = str(tmp_path_factory.mktemp("warehouse"))
-    spark = build_session(app_name="fas-tests", cpus=8, shuffle_partitions=8,
+    local_dir = str(tmp_path_factory.mktemp("spark-local"))
+    # One task slot and one shuffle partition per core of the host, or
+    # of $SPARK_GRAFT_CPUS when set.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or os.cpu_count()
+    spark = build_session(app_name="fas-tests", cpus=cpus,
+                          shuffle_partitions=cpus,
                           extra_conf={"spark.ui.enabled": "false",
-                                      "spark.sql.warehouse.dir": warehouse})
+                                      "spark.sql.warehouse.dir": warehouse,
+                                      "spark.local.dir": local_dir})
     yield spark
     spark.stop()
 

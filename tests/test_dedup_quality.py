@@ -95,7 +95,7 @@ def test_star_long_chain_converges_in_log_rounds(spark):
     single chain 0-1-...-100 (diameter 100). large-star/small-star
     must fully converge within 8 alternation rounds (O(log^2 n) --
     log2(101) ~ 6.7), where min-label propagation moves the label one
-    hop per round and provably CANNOT finish in 10."""
+    hop per round and provably CANNOT finish in 10, so it must raise."""
     from flink_ad_analytics_spark.operators.dedup import connected_components
 
     n = 101
@@ -113,14 +113,12 @@ def test_star_long_chain_converges_in_log_rounds(spark):
     assert star == {i: 0 for i in range(n)}
 
     # contrast: the diameter-bound algorithm, capped at 10 rounds, has
-    # not yet propagated label 0 to the chain's far end
-    partial = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(
+    # not yet propagated label 0 to the chain's far end -- and says so
+    # instead of returning partial labels
+    with pytest.raises(ValueError, match="after 10 rounds"):
+        connected_components(
             edges, vertices, algorithm="min_label", max_iter=10
-        ).collect()
-    }
-    assert partial[n - 1] != 0
+        )
 
 
 def test_stop_shingle_pruning_only_shrinks_scores(spark):
@@ -282,75 +280,6 @@ def test_containment_catches_embedded_quote_jaccard_misses(spark):
     assert out == {(1, 2): 1.0}
     jac = ngram_jaccard_pairs(docs, threshold=0.2).collect()
     assert jac == []  # symmetric Jaccard misses the embedding entirely
-
-
-def test_bloom_probe_no_false_negatives(spark):
-    """Every key actually in the build set must survive the probe --
-    the Bloom guarantee the decontamination path's exactness rests
-    on. Probed with members AND non-members (tiny m to force real
-    false positives into the mix)."""
-    from flink_ad_analytics_spark.operators.dedup import bloom_build, bloom_probe
-
-    members = spark.range(0, 500).select(
-        F.concat(F.lit("gram-"), F.col("id")).alias("gram")
-    )
-    probe = spark.range(0, 2000).select(
-        F.concat(F.lit("gram-"), F.col("id")).alias("gram")
-    )
-    bloom = bloom_build(members, "gram", m_bits=1 << 10, k=3)
-    kept = {r.gram for r in bloom_probe(probe, bloom, "gram", m_bits=1 << 10, k=3).collect()}
-    missing = {f"gram-{i}" for i in range(500)} - kept
-    assert not missing, f"bloom dropped true members: {sorted(missing)[:5]}"
-
-
-def test_decontaminate_bloom_equals_exact(spark):
-    """The bloom-prefiltered path must return EXACTLY the broadcast
-    semi-join path's answer (false positives all die in verify)."""
-    from flink_ad_analytics_spark.operators.dedup import (
-        decontaminate,
-        decontaminate_bloom,
-    )
-
-    docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
-    is_bench = F.col("doc_id") % 5 == 0
-    bench, cand = docs.filter(is_bench), docs.filter(~is_bench)
-    exact = {r.doc_id for r in decontaminate(cand, bench, n=6).select("doc_id").collect()}
-    # small m_bits: plenty of bloom false positives, verify must kill them
-    blm = {
-        r.doc_id
-        for r in decontaminate_bloom(cand, bench, n=6, m_bits=1 << 12, k=3)
-        .select("doc_id")
-        .collect()
-    }
-    assert blm == exact
-
-
-def test_bloom_probe_zero_shuffle(spark):
-    """The probe side must reach the verify stage through broadcast
-    joins only -- any hashpartitioning exchange before the dirty-id
-    distinct means the 100 TB side got shuffled."""
-    from flink_ad_analytics_spark.operators.dedup import (
-        bloom_build,
-        bloom_probe,
-        ngram_set,
-    )
-
-    docs = spark.read.parquet(f"{SF_CORRECT}/documents.parquet")
-    grams = ngram_set(docs, 6)
-    # build side under a DIFFERENT column name, so the gate below can
-    # tell the build's (legitimate, small-side) distinct shuffle from a
-    # probe-side shuffle on gram
-    members = grams.select(F.col("gram").alias("g")).distinct()
-    bloom = bloom_build(members, "g", m_bits=1 << 16, k=5)
-    probed = bloom_probe(grams, bloom, "gram", m_bits=1 << 16, k=5)
-    plan = probed._sc._jvm.PythonSQLUtils.explainString(
-        probed._jdf.queryExecution(), "simple"
-    )
-    assert plan.count("BroadcastHashJoin") == 5
-    # the only hash exchanges allowed belong to the bloom BUILD (on
-    # word_idx) and ngram_set's pinned doc-id repartition -- none may
-    # partition on the probe's gram
-    assert "hashpartitioning(gram" not in plan
 
 
 def test_connected_components_random_graphs_match_union_find(spark):

@@ -52,8 +52,8 @@ def test_fake_paths_produce_rows(assets):
 def test_pcm_frame_stats_planted_payload(spark):
     """Hand-computed s16le payload: 64 samples = 2 full frames plus a
     3-sample tail (dropped), one silent frame, one loud frame with a
-    known peak and two hot samples; a second asset below one frame
-    vanishes entirely."""
+    known peak and two hot samples; a second asset below one frame and
+    a third with a NULL payload vanish entirely."""
     import struct
 
     from flink_ad_analytics_spark.operators.multimodal import pcm_frame_stats
@@ -67,7 +67,11 @@ def test_pcm_frame_stats_planted_payload(spark):
     payload = struct.pack(f"<{len(samples)}h", *samples)
     short = struct.pack("<3h", 1, 2, 3)   # < 32 samples: no output row
     assets = spark.createDataFrame(
-        [(1, "audio/pcm", bytearray(payload)), (2, "audio/pcm", bytearray(short))],
+        [
+            (1, "audio/pcm", bytearray(payload)),
+            (2, "audio/pcm", bytearray(short)),
+            (3, "audio/pcm", None),
+        ],
         "asset_id long, mime string, payload binary",
     )
     rows = pcm_frame_stats(assets).collect()
@@ -83,22 +87,6 @@ def test_pcm_frame_stats_planted_payload(spark):
     assert r.total_energy == expected_energy
 
 
-def test_pcm_arrow_equals_sql(spark):
-    """The zero-shuffle Arrow decode must be row-for-row identical to
-    the oracle-anchored SQL plan on the real fixture."""
-    from flink_ad_analytics_spark.operators.multimodal import (
-        pcm_frame_stats,
-        pcm_frame_stats_arrow,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    a = assets_from_documents(docs)
-    sql_rows = sorted(map(tuple, pcm_frame_stats(a).collect()))
-    arrow_rows = sorted(map(tuple, pcm_frame_stats_arrow(a).collect()))
-    assert sql_rows == arrow_rows
-    assert len(sql_rows) > 0
-
-
 def test_pcm_random_payloads_match_python_reference(spark):
     """Seeded random s16le payloads (odd byte counts, empty, short,
     peak values included) vs an independent pure-Python computation of
@@ -107,9 +95,7 @@ def test_pcm_random_payloads_match_python_reference(spark):
     import random
     import struct
 
-    from flink_ad_analytics_spark.operators.multimodal import (
-        pcm_frame_stats_arrow,
-    )
+    from flink_ad_analytics_spark.operators.multimodal import pcm_frame_stats
 
     rng = random.Random(20260814)
     payloads = {}
@@ -140,7 +126,7 @@ def test_pcm_random_payloads_match_python_reference(spark):
     )
     got = {r.asset_id: (r.n_samples, r.n_frames, r.total_energy, r.peak,
                         r.silence_frames, r.hot_samples)
-           for r in pcm_frame_stats_arrow(assets).collect()}
+           for r in pcm_frame_stats(assets).collect()}
     expected = {}
     for aid, (raw, _) in payloads.items():
         samples = list(struct.unpack(f"<{len(raw)//2}h", raw[: len(raw) // 2 * 2]))

@@ -64,36 +64,13 @@ def test_entry_smoke(spark):
     assert len(df.columns) == 6
 
 
-def test_table_profile_approx_accuracy(spark):
-    """The HLL profile's accuracy contract vs the exact profile: every
-    non-distinct stat byte-identical, every approximate distinct count
-    within 2% relative error (rsd=0.01 gives ~1% standard error; 2%
-    is > 2 sigma and deterministic for a fixed dataset)."""
-    exact = {
-        r["col_name"]: r
-        for r in QUERIES["table_profile"](spark, SF_CORRECT).collect()
-    }
-    approx = {
-        r["col_name"]: r
-        for r in QUERIES["table_profile_approx"](spark, SF_CORRECT).collect()
-    }
-    assert set(exact) == set(approx)
-    for col, e in exact.items():
-        a = approx[col]
-        for field in ("n_rows", "n_nulls", "min_repr", "max_repr"):
-            assert a[field] == e[field], f"{col}.{field}: {a[field]} != {e[field]}"
-        rel = abs(a["n_distinct"] - e["n_distinct"]) / max(1, e["n_distinct"])
-        assert rel <= 0.02, (
-            f"{col}: approx distinct {a['n_distinct']} vs exact "
-            f"{e['n_distinct']} (rel err {rel:.4f} > 2%)"
-        )
-
-
 def test_table_profile_served_accuracy(spark):
-    """The standing-index serving path's accuracy contract, same gate
-    as the approx twin: nulls/min/max/n_rows byte-identical to the
-    exact profile (sums and min/max folds are exact over any partition
-    of the rows), merged HLL distinct estimates within 2%."""
+    """The standing-index serving path's accuracy contract:
+    nulls/min/max/n_rows byte-identical to the exact profile (sums and
+    min/max folds are exact over any partition of the rows), merged
+    HLL distinct estimates within 2% (lgConfigK=14 gives ~0.8%
+    standard error; 2% is > 2 sigma and deterministic for a fixed
+    dataset)."""
     exact = {
         r["col_name"]: r
         for r in QUERIES["table_profile"](spark, SF_CORRECT).collect()
@@ -146,24 +123,38 @@ def test_table_profile_plans(spark):
     column plus ONE wide nulls/n_rows scan (the round-9 terminal
     split-payload shape: the dominant near-unique-column exchanges
     carry bare values, no cnt longs -- adjudicated in
-    .benchmarks/table_profile_floor_sf10.json), while the approx
-    profile reads the table exactly ONCE."""
-    def plan_of(name):
-        df = QUERIES[name](spark, SF_CORRECT)
+    .benchmarks/table_profile_floor_sf10.json), while the HLL
+    profile index that table_profile_served serves from is built in
+    exactly ONE read of the table."""
+    from flink_ad_analytics_spark.operators.profile import build_profile_index
+    from flink_ad_analytics_spark.queries import (
+        _PROFILE_COLS,
+        _PROFILE_INDEX_SHARDS,
+    )
+    from flink_ad_analytics_spark.sources.batch import load_table
+
+    def plan_of(df):
         return df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "simple"
         )
 
-    approx = plan_of("table_profile_approx")
-    assert "Expand" not in approx, approx
-    assert approx.count("FileScan") == 1, approx
+    orders = load_table(spark, SF_CORRECT, "orders")
+    index = plan_of(
+        build_profile_index(
+            orders,
+            _PROFILE_COLS,
+            n_shards=_PROFILE_INDEX_SHARDS,
+            shard_key="o_orderkey",
+        )
+    )
+    assert "Expand" not in index, index
+    assert index.count("FileScan") == 1, index
 
-    exact = plan_of("table_profile")
+    exact = plan_of(QUERIES["table_profile"](spark, SF_CORRECT))
     assert "Expand" not in exact, exact
     # one single-column distinct scan per profiled column + the wide
     # nulls/n_rows scan; any (value, cnt) payload regression re-adds
     # a partial_count under the distinct aggregates
-    from flink_ad_analytics_spark.queries import _PROFILE_COLS
 
     assert exact.count("FileScan") == len(_PROFILE_COLS) + 1, exact
     # the lone count(1) is the wide scan's n_rows; the per-column

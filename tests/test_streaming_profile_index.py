@@ -3,7 +3,7 @@ analogue of the events-family rollup maintenance. A replayed orders
 corpus must yield an index whose SERVED profile matches the batch
 exact profile on every mergeable-exact stat (n_rows / nulls / min /
 max byte-equal) with distinct counts inside the same 2% HLL gate as
-q_table_profile_approx, and replay double-appends must be harmless."""
+q_table_profile_served, and replay double-appends must be harmless."""
 
 from __future__ import annotations
 
